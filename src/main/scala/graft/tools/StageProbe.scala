@@ -45,7 +45,9 @@ object StageProbe {
         val heap0 = heapUsed
         val t0 = System.nanoTime()
         fn(spark, dir).write.format("noop").mode("overwrite").save()
-        println(f"[probe] $name run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
+        val secs = (System.nanoTime() - t0) / 1e9
+        System.gc() // heapDelta = retained heap, not uncollected garbage
+        println(f"[probe] $name run$i: $secs%.2f s " +
           f"jobs=${jobs.get} stages=${stages.get} taskTime=${taskMs.get / 1e3}%.2f s " +
           f"peakExecMem=${peakMem.get / 1048576.0}%.0f MB " +
           f"heapDelta=${(heapUsed - heap0) / 1048576.0}%.0f MB")

@@ -57,6 +57,20 @@ class LangClassifierSpec extends SparkTestBase {
     assert(out.filterKeys(_ != 900L).forall { case (_, (h, p)) => h == p })
   }
 
+  test("q218: an empty training stride (no rows, or only NULL/empty " +
+      "text) returns an empty frame with the entry's schema") {
+    val none = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "lang")
+    val blank = Seq((1L, null.asInstanceOf[String], "en"), (2L, "", "es"),
+      (3L, "   ", "de")).toDF("doc_id", "text", "lang")
+    Seq(none, blank).foreach { docs =>
+      val out = LangClassifier.trainScore(docs)
+      assert(out.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+        "doc_id" -> "bigint", "heur_lang" -> "string",
+        "pred_lang" -> "string", "score_micro" -> "bigint"))
+      assert(out.collect().isEmpty)
+    }
+  }
+
   test("q218: classes list matches q30's profile order (the tie-break contract)") {
     assert(LangClassifier.Classes == TextAnalysis.profiles.map(_._1))
     assert(LangClassifier.Classes == Seq("en", "es", "de", "fr"))

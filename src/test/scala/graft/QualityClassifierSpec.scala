@@ -65,6 +65,20 @@ class QualityClassifierSpec extends SparkTestBase {
       7L -> 0L, 8L -> 0L, 9L -> 0L, 10L -> 0L, 11L -> 1L))
   }
 
+  test("q217: an empty training stride (no rows, or only NULL/empty " +
+      "text) returns an empty frame with the entry's schema") {
+    val none = Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source")
+    val blank = Seq((1L, null.asInstanceOf[String], "src0"), (2L, "", "src2"),
+      (3L, "   ", "src1")).toDF("doc_id", "text", "source")
+    Seq(none, blank).foreach { docs =>
+      val out = QualityClassifier.trainScore(docs)
+      assert(out.schema.map(f => f.name -> f.dataType.simpleString) == Seq(
+        "doc_id" -> "bigint", "label" -> "bigint",
+        "score_micro" -> "bigint", "pred" -> "bigint"))
+      assert(out.collect().isEmpty)
+    }
+  }
+
   test("q217: train stride ladder is bounded and matches its SQL twin") {
     import QualityClassifier._
     assert(trainMod(0L) == 1L)
