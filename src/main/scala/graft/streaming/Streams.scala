@@ -215,30 +215,65 @@ object Streams {
     * batchId: on a foreachBatch replay the crashed attempt's own version
     * must not be an input (reading and rewriting the same files wedges
     * the stream), and versions ≥ batchId can only be earlier
-    * incarnations of this same batch. */
+    * incarnations of this same batch.
+    *
+    * The micro-batch is read twice by the merge (union side and anti-join
+    * build side), so it goes through [[materialisedOnce]]: its source
+    * plan — a stateful dedup included — runs once per trigger. */
   def upsertSink(stream: DataFrame, path: String, keys: Seq[String]):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       val spark = batch.sparkSession
-      val merged = latestCommittedVersionBelow(spark, path, batchId) match {
-        case Some(v) =>
-          graft.operators.Merge.upsertSnapshot(
-            spark.read.parquet(s"$path/v$v"), batch, keys)
-        case None => batch
+      val base = latestCommittedVersionBelow(spark, path, batchId)
+      publishVersion(spark, path, batchId) { staging =>
+        materialisedOnce(batch) { b =>
+          base.fold(b)(v => graft.operators.Merge.upsertSnapshot(
+              spark.read.parquet(s"$path/v$v"), b, keys))
+            .write.mode("overwrite").parquet(staging.toString)
+        }
       }
-      val dir = new org.apache.hadoop.fs.Path(path)
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val staging = new org.apache.hadoop.fs.Path(dir,
-        s"_staging-v$batchId-${java.util.UUID.randomUUID().toString.take(8)}")
-      merged.write.mode("overwrite").parquet(staging.toString)
-      val target = new org.apache.hadoop.fs.Path(dir, s"v$batchId")
-      // exists-check first: some FileSystems rename INTO an existing dir
-      // rather than failing; a racing loser must drop its copy either way
-      val published = !fs.exists(target) && fs.rename(staging, target)
-      if (!published) fs.delete(staging, true)
-      tryCommitVersion(spark, path, batchId) // false = already committed: done
-      ()
     }
+
+  /** Stage → publish → claim (the protocol [[upsertSink]] documents):
+    * `stage` fills a fresh, uniquely named staging dir, which is renamed
+    * to `v<v>` unless that dir already exists, and `_commits/<v>` is
+    * claimed. */
+  private def publishVersion(spark: SparkSession, path: String, v: Long)(
+      stage: org.apache.hadoop.fs.Path => Unit): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new org.apache.hadoop.fs.Path(dir,
+      s"_staging-v$v-${java.util.UUID.randomUUID().toString.take(8)}")
+    stage(staging)
+    val target = new org.apache.hadoop.fs.Path(dir, s"v$v")
+    // exists-check first: some FileSystems rename INTO an existing dir
+    // rather than failing; a racing loser must drop its copy either way
+    val published = !fs.exists(target) && fs.rename(staging, target)
+    if (!published) fs.delete(staging, true)
+    tryCommitVersion(spark, path, v) // false = already committed: done
+  }
+
+  /** Runs `f` on `df` computed at most once, however often `f` reads it,
+    * and releases the computed blocks when `f` returns.
+    *
+    * A micro-batch's plan holds the stream's source scan and stateful
+    * operators, and every action on it re-runs them (the merge reads the
+    * batch up to three times). The copy is a lazy `localCheckpoint`: the
+    * first action computes and stores its blocks, later ones read them.
+    * It is a checkpoint and not `persist()` on purpose: the merge unions
+    * the batch with an anti-join against itself, the union re-instances
+    * the second reference with fresh attribute ids, the cache lookup
+    * then misses, and the stateful plan still runs twice (measured:
+    * state-store `numRowsUpdated` stays at 2× the batch rows). A
+    * checkpoint is a leaf over one RDD, so every re-instanced reference
+    * still reads the same blocks. */
+  private def materialisedOnce[T](df: DataFrame)(f: DataFrame => T): T = {
+    val once = df.localCheckpoint(eager = false)
+    try f(once)
+    finally once.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+    }
+  }
 
   /** Hash bucket of the merge key(s): pmod(hash(keys), n). The bucket of
     * a key never changes, so a batch row and its base row always land in
@@ -262,7 +297,12 @@ object Streams {
     * `_commits` never see a partial version, and a foreachBatch replay
     * recomputes the identical merge (the base resolves strictly below
     * the replayed batchId). Old versions are swept by
-    * [[vacuumBucketed]] once no current manifest references them. */
+    * [[vacuumBucketed]] once no current manifest references them.
+    *
+    * Each trigger runs the micro-batch's source plan (scan, parse,
+    * stateful dedup) exactly once: [[mergeBucketedBatch]] materialises
+    * the batch once, as a local checkpoint and not a `persist()` (see
+    * [[materialisedOnce]] for the cache miss that rules `persist()` out). */
   def upsertSinkBucketed(stream: DataFrame, path: String, keys: Seq[String],
       numBuckets: Int = 16, retainVersions: Int = 1):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
@@ -274,49 +314,66 @@ object Streams {
 
   /** One bucketed merge (the foreachBatch body, callable directly for
     * batch backfills): merge `batch` into the buckets it touches and
-    * publish version `batchId` with an updated manifest. */
+    * publish version `batchId` with an updated manifest.
+    *
+    * `batch` is materialised once ([[materialisedOnce]]): the
+    * touched-bucket collect computes it, and the merge's union and
+    * anti-join sides read those blocks, so a stream's source plan runs
+    * once per trigger. A batch that touches no bucket (every no-data
+    * trigger) publishes its manifest-only version without a Spark
+    * write. */
   def mergeBucketedBatch(batch: DataFrame, path: String, keys: Seq[String],
       numBuckets: Int, batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val prevManifest: Map[Int, Long] =
       latestCommittedVersionBelow(spark, path, batchId)
         .map(v => readManifest(spark, path, v)).getOrElse(Map.empty)
-    val bb = batch.withColumn("__bucket", bucketExpr(keys, numBuckets))
-    // ≤ numBuckets values — a bounded driver collect, not a data collect
-    val touched = bb.select("__bucket").distinct().collect()
-      .map(_.getInt(0)).sorted
-    val baseTouched = touched.toSeq.flatMap { b =>
-      prevManifest.get(b).map(v =>
-        spark.read.parquet(s"$path/v$v/__bucket=$b").withColumn("__bucket", lit(b)))
-    }.reduceOption(_ unionByName _)
-    val merged = baseTouched match {
-      case Some(base) => graft.operators.Merge.upsertSnapshot(base, bb, keys)
-      case None => bb
+    publishVersion(spark, path, batchId) { staging =>
+      val touched = materialisedOnce(
+          batch.withColumn("__bucket", bucketExpr(keys, numBuckets))) { bb =>
+        // ≤ numBuckets values — a bounded driver collect, not a data collect
+        val touched = bb.select("__bucket").distinct().collect()
+          .map(_.getInt(0)).sorted
+        if (touched.isEmpty) fs.mkdirs(staging)
+        else {
+          // a key's bucket never changes, so re-deriving `__bucket` on
+          // the base rows gives each row the bucket its dir is named for
+          val base = readBuckets(spark, path,
+            touched.flatMap(b => prevManifest.get(b).map(b -> _)))
+          base.fold(bb)(b => graft.operators.Merge.upsertSnapshot(
+              b.withColumn("__bucket", bucketExpr(keys, numBuckets)), bb, keys))
+            .write.mode("overwrite").partitionBy("__bucket").parquet(staging.toString)
+        }
+        touched
+      }
+      // manifest rides INSIDE the staged version dir, so the rename
+      // publishes data + manifest atomically together
+      writeManifest(fs, staging, prevManifest ++ touched.map(_ -> batchId))
     }
-    val staging = new org.apache.hadoop.fs.Path(dir,
-      s"_staging-v$batchId-${java.util.UUID.randomUUID().toString.take(8)}")
-    merged.write.mode("overwrite").partitionBy("__bucket").parquet(staging.toString)
-    // manifest rides INSIDE the staged version dir, so the rename
-    // publishes data + manifest atomically together
-    writeManifest(fs, staging, prevManifest ++ touched.map(_ -> batchId))
-    val target = new org.apache.hadoop.fs.Path(dir, s"v$batchId")
-    val published = !fs.exists(target) && fs.rename(staging, target)
-    if (!published) fs.delete(staging, true)
-    tryCommitVersion(spark, path, batchId)
-    ()
   }
 
+  /** One scan over the bucket dirs named by `buckets` (bucket → version):
+    * a single file index and one footer-inference job however many
+    * buckets and versions it spans. Each bucket dir is a root of the
+    * scan, so `__bucket` is not read back as a column. The schema is
+    * inferred, not taken from a caller, so a base whose columns differ
+    * from a batch's fails at the merge's `unionByName`. None when
+    * `buckets` is empty. */
+  private def readBuckets(spark: SparkSession, path: String,
+      buckets: Iterable[(Int, Long)]): Option[DataFrame] =
+    if (buckets.isEmpty) None
+    else Some(spark.read.parquet(buckets.toSeq.sorted
+      .map { case (b, v) => s"$path/v$v/__bucket=$b" }: _*))
+
   /** The latest bucketed snapshot: each bucket read from the version the
-    * manifest references, unioned. Returns None before the first commit
-    * or when the manifest is empty (only empty batches ever committed). */
+    * manifest references, in one scan. Returns None before the first
+    * commit or when the manifest is empty (only empty batches ever
+    * committed). */
   def currentSnapshotBucketed(spark: SparkSession, path: String): Option[DataFrame] =
-    latestCommittedVersion(spark, path).flatMap { v =>
-      readManifest(spark, path, v).toSeq.sortBy(_._1)
-        .map { case (b, ver) => spark.read.parquet(s"$path/v$ver/__bucket=$b") }
-        .reduceOption(_ unionByName _)
-    }
+    latestCommittedVersion(spark, path)
+      .flatMap(v => readBuckets(spark, path, readManifest(spark, path, v)))
 
   /** q42's daily-ingest loop under Structured Streaming — the
     * reference's qdrant-deduplicator batch loop
@@ -445,39 +502,30 @@ object Streams {
     * .filter(_ < bound)` would yield None and silently merge against
     * empty, publishing a manifest that lost every base row. */
   def latestCommittedVersionBelow(spark: SparkSession, path: String,
-      bound: Long): Option[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commits = new org.apache.hadoop.fs.Path(dir, "_commits")
-    val fromLog =
-      if (fs.exists(commits))
-        fs.listStatus(commits).toSeq
-          .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-          .filter(_ < bound).maxOption
-      else None
-    // pre-log tables: the _LATEST pointer is all there is
-    fromLog.orElse(latestCommittedVersion(spark, path).filter(_ < bound))
-  }
+      bound: Long): Option[Long] =
+    committedVersions(spark, path).filter(_ < bound).maxOption
+      // pre-log tables: the _LATEST pointer is all there is
+      .orElse(latestCommittedVersion(spark, path).filter(_ < bound))
 
   /** Highest committed version per the `_commits` log (source of truth);
     * falls back to the `_LATEST` pointer for tables written before the
     * log existed. */
-  def latestCommittedVersion(spark: SparkSession, path: String): Option[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commits = new org.apache.hadoop.fs.Path(dir, "_commits")
-    val fromLog =
-      if (fs.exists(commits))
-        fs.listStatus(commits).toSeq
-          .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
-          .maxOption
-      else None
-    fromLog.orElse {
-      val latest = new org.apache.hadoop.fs.Path(dir, "_LATEST")
+  def latestCommittedVersion(spark: SparkSession, path: String): Option[Long] =
+    committedVersions(spark, path).maxOption.orElse {
+      val latest = new org.apache.hadoop.fs.Path(path, "_LATEST")
+      val fs = latest.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(latest))
         scala.util.Try(readUtf8(fs, latest).trim.toLong).toOption
       else None
     }
+
+  /** Every version id the `_commits` log names; empty without a log. */
+  private def committedVersions(spark: SparkSession, path: String): Seq[Long] = {
+    val commits = new org.apache.hadoop.fs.Path(path, "_commits")
+    val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(commits)) Nil
+    else fs.listStatus(commits).toSeq
+      .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
   }
 
   /** Commit the `_LATEST` version pointer through the Hadoop FileSystem
@@ -541,11 +589,10 @@ object Streams {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(dir, s"_commits/$v"))) None
     else {
-      val m = readManifest(spark, path, v).toSeq.sortBy(_._1)
+      val m = readManifest(spark, path, v)
       if (m.exists { case (b, ver) =>
         !fs.exists(new org.apache.hadoop.fs.Path(dir, s"v$ver/__bucket=$b")) }) None
-      else m.map { case (b, ver) => spark.read.parquet(s"$path/v$ver/__bucket=$b") }
-        .reduceOption(_ unionByName _)
+      else readBuckets(spark, path, m)
     }
   }
 

@@ -1,29 +1,13 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.graft.ListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** Driver round-trips of the trained classifiers, pinned: job counts do
   * not move with host load, so a rise here is a real extra pass or
   * barrier, not noise. Each query runs in full into the noop sink. */
 class JobCountSpec extends SparkTestBase {
 
-  private def jobsOf(query: String): Int = {
-    val jobs = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      SparkEntry.queries(query)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      ListenerBus.drain(spark.sparkContext)
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  private def jobsOf(query: String): Int = jobsDuring(
+    SparkEntry.queries(query)(spark, sfDir)
+      .write.format("noop").mode("overwrite").save())
 
   // q219's report write is re-planned by adaptive execution as its
   // stages finish; by finishing order that plan takes 10 jobs or (about

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,4 +22,22 @@ trait SparkTestBase extends AnyFunSuite {
     s
   }
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. Job counts do not move with
+    * host load, so a spec can pin them exactly; the listener bus is
+    * drained on both sides so every job of `body`, and only those, is
+    * counted. */
+  def jobsDuring(body: => Any): Int = {
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      ListenerBus.drain(spark.sparkContext)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

@@ -383,6 +383,78 @@ class StreamingSpec extends SparkTestBase {
     assert(snap() === Map(1L -> -1.0, 2L -> 20.0, 3L -> 3.0))
   }
 
+  // The merge reads a micro-batch more than once (touched-bucket collect,
+  // union side, anti-join build side); each read of an unmaterialised
+  // batch re-runs its stateful source plan, which the state store's
+  // per-batch numRowsUpdated counts once per execution.
+  Seq[(String, (org.apache.spark.sql.DataFrame, String) =>
+      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
+      String => Option[org.apache.spark.sql.DataFrame])](
+    ("upsertSinkBucketed",
+      (df, dir) => Streams.upsertSinkBucketed(df, dir, Seq("event_id"), numBuckets = 4),
+      dir => Streams.readLatestBucketed(spark, dir)),
+    ("upsertSink",
+      (df, dir) => Streams.upsertSink(df, dir, Seq("event_id")),
+      dir => Streams.readLatest(spark, dir))
+  ).foreach { case (name, sink, read) =>
+    test(s"$name runs each micro-batch's stateful plan once and leaves no blocks behind") {
+      implicit val sqlCtx = spark.sqlContext
+      import spark.implicits._
+      val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_once").toString
+      val n = 40
+      val src = MemoryStream[E]
+      val persisted = spark.sparkContext.getPersistentRDDs.size
+      val q = sink(Streams.dedupReplays(src.toDF()), dir).start()
+      try {
+        // the second batch merges into the first's snapshot
+        src.addData((1 to n).map(i => E(i, ts(i % 30), i, "a", i.toDouble)): _*)
+        q.processAllAvailable()
+        src.addData((n + 1 to 2 * n).map(i => E(i, ts(30 + i % 30), i, "b", i.toDouble)): _*)
+        q.processAllAvailable()
+        val updated = q.recentProgress.filter(_.numInputRows > 0)
+          .map(_.stateOperators(0).numRowsUpdated).toSeq
+        assert(updated === Seq(n.toLong, n.toLong))
+        assert(read(dir).get.count() === 2 * n)
+        assert(spark.sparkContext.getPersistentRDDs.size <= persisted,
+          "a trigger left its materialised batch persisted")
+      } finally q.stop()
+    }
+  }
+
+  test("bucketed readers build a snapshot spanning 4 buckets and 2 versions in one Spark job") {
+    import spark.implicits._
+    val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_readjobs").toString
+    def batch(ids: Seq[Long], v: Double) = ids.map(k => E(k, ts(k.toInt), k, "a", v)).toDF()
+    Streams.mergeBucketedBatch(batch(1L to 32L, 1.0), dir, Seq("event_id"), 4, 0L)
+    Streams.mergeBucketedBatch(batch(Seq(1L), 2.0), dir, Seq("event_id"), 4, 1L)
+    val m = Streams.readManifest(spark, dir, 1)
+    assert(m.size === 4 && m.values.toSet === Set(0L, 1L))
+    assert(jobsDuring(Streams.readLatestBucketed(spark, dir).get) <= 1)
+    assert(jobsDuring(Streams.readVersionBucketed(spark, dir, 1).get) <= 1)
+  }
+
+  test("mergeBucketedBatch equals a chained Merge.upsertSnapshot, NULL keys and " +
+      "buckets re-touched by later batches included") {
+    import spark.implicits._
+    val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_bdiff").toString
+    val batches = Seq(
+      (1L to 32L).map(k => (Option(k), s"a$k")) :+ (None -> "a-null"),
+      Seq(Some(1L) -> "b1", Some(5L) -> "b5", Some(9L) -> "b9", None -> "b-null"),
+      Seq(Some(2L) -> "c2", Some(5L) -> "c5", None -> "c-null")
+    ).map(_.toDF("k", "v"))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      Streams.mergeBucketedBatch(b, dir, Seq("k"), 4, i.toLong) }
+    val chained = batches.reduceLeft((base, b) =>
+      graft.operators.Merge.upsertSnapshot(base, b, Seq("k")))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("k", "v").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1)))
+      .toSeq.sortBy(_.toString)
+    val expected = rows(chained)
+    assert(expected.count(_._1.isEmpty) === 3 && expected.contains(Some(5L) -> "c5"))
+    assert(Streams.readManifest(spark, dir, 2).size === 4)
+    assert(rows(Streams.readLatestBucketed(spark, dir).get) === expected)
+  }
+
   test("upsertSink: replay heals a version published before a crash stole the claim") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
