@@ -10,6 +10,9 @@ import org.apache.spark.sql.SparkSession
   * to ~2-3x total cores and let AQE coalesce).
   */
 object GraftSession {
+  /** Size of Spark's generated-class cache; see the setting in `builder`. */
+  val codegenCacheEntries = 1024
+
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -28,6 +31,15 @@ object GraftSession {
       // not the repo root
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.ui.enabled", "false")
+      // Spark's JVM-wide LRU cache of generated classes holds 100 by
+      // default. One curation request, or one medallion pass, needs ~160
+      // distinct classes, so at 100 every class is evicted before its next
+      // use and each repeated pass recompiles it (~145 compilations, 2-2.5 s
+      // of janino per perfbench pass) and runs it cold again. 1024 holds
+      // either working set several times over; it stays bounded because a
+      // streaming driver still compiles a few new classes per trigger.
+      // Static: read once, when the first class is generated.
+      .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

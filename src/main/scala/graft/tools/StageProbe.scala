@@ -1,9 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Ad-hoc stage timer for optimization work: runs a query twice on a
-  * fresh session (cold + warm) and prints per-run wall clock, with the
+  * fresh `GraftSession` (cold + warm) and prints per-run wall clock, with the
   * noop sink so the timing covers every column of every row (guide
   * §1.4). Usage: runMain graft.tools.StageProbe <query>[,query…] [sfDir]
   * [runs]. */
@@ -13,13 +11,7 @@ object StageProbe {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
