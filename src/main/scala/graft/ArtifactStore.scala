@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Shared store for derived artifacts that are built once per source dir
@@ -14,12 +14,13 @@ import org.apache.spark.sql.SparkSession
   * number of drivers see the same artifacts; `java.io.File` paths would
   * silently rebuild per driver.
   *
-  * Publish protocol (same story as Streams.upsertSink): build into a
-  * UNIQUE staging dir, then atomically rename to the final path. A
-  * concurrent builder racing to the same artifact loses the rename and
-  * drops its staging copy; readers either see the complete artifact or
-  * none — never a partial one, because the final path only ever appears
-  * via the rename of a fully-built staging dir. */
+  * Publish protocol ([[publishStaged]], shared with the streaming MERGE
+  * sink's versions, `graft.streaming.Streams.publishVersion`): build
+  * into a UNIQUE staging dir, then atomically rename to the final path.
+  * A concurrent builder racing to the same artifact loses the rename
+  * and drops its staging copy; readers either see the complete artifact
+  * or none — never a partial one, because the final path only ever
+  * appears via the rename of a fully-built staging dir. */
 object ArtifactStore {
 
   def warehouseRoot(spark: SparkSession): Path = {
@@ -39,25 +40,34 @@ object ArtifactStore {
     val fin = new Path(root, name)
     if (!fs.exists(fin)) {
       fs.mkdirs(root)
-      val staging = new Path(root,
-        s"_staging-$name-${java.util.UUID.randomUUID().toString.take(8)}")
-      // a build that throws must not strand its staging dir forever
-      var built = false
-      try { build(staging.toString); built = true }
-      finally if (!built) fs.delete(staging, true)
-      // exists-check first: some FileSystems rename INTO an existing dir
-      // rather than failing; a racing loser must drop its copy either way
-      val published = !fs.exists(fin) && fs.rename(staging, fin)
-      if (!published) fs.delete(staging, true)
-      // TOCTOU guard: between the exists-check and the rename, a racing
-      // loser on a FileSystem that renames INTO an existing dir can nest
-      // its staging copy inside the published artifact. Readers ignore it
-      // (underscore prefix), but the copy would leak — sweep it.
-      if (fs.exists(fin))
-        fs.listStatus(fin).filter(_.getPath.getName.startsWith("_staging-"))
-          .foreach(st => fs.delete(st.getPath, true))
+      publishStaged(fs, fin)(staging => build(staging.toString))
     }
     fin.toString
+  }
+
+  /** Stage → rename → drop-the-loser: `build` fills a fresh staging dir
+    * `_staging-<target name>-<uuid>` next to `target`, which is renamed
+    * to `target` unless `target` already exists. A `build` that throws
+    * leaves no staging dir and publishes nothing. */
+  private[graft] def publishStaged(fs: FileSystem, target: Path)(
+      build: Path => Unit): Unit = {
+    val staging = new Path(target.getParent,
+      s"_staging-${target.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
+    // a build that throws must not strand its staging dir forever
+    var built = false
+    try { build(staging); built = true }
+    finally if (!built) fs.delete(staging, true)
+    // exists-check first: some FileSystems rename INTO an existing dir
+    // rather than failing; a racing loser must drop its copy either way
+    val published = !fs.exists(target) && fs.rename(staging, target)
+    if (!published) fs.delete(staging, true)
+    // TOCTOU guard: between the exists-check and the rename, a racing
+    // loser on a FileSystem that renames INTO an existing dir can nest
+    // its staging copy inside the published dir. Readers ignore it
+    // (underscore prefix), but the copy would leak — sweep it.
+    if (fs.exists(target))
+      fs.listStatus(target).filter(_.getPath.getName.startsWith("_staging-"))
+        .foreach(st => fs.delete(st.getPath, true))
   }
 
   /** [[ensure]] with retention for content-fingerprinted artifacts.
@@ -108,8 +118,8 @@ object ArtifactStore {
   }
 
   /** Sweeps `_staging-*` dirs stranded by a crashed BUILDER PROCESS (the
-    * in-process failure path is covered by [[ensure]]'s try/finally; a
-    * kill -9 mid-build is not). Only dirs whose NEWEST file anywhere in
+    * in-process failure path is covered by [[publishStaged]]'s
+    * try/finally; a kill -9 mid-build is not). Only dirs whose NEWEST file anywhere in
     * the tree is older than `graceMs` go: a directory's own mtime only
     * changes when a direct child appears, so a long-running Spark write
     * (committer creates `_temporary` at job start, then writes task

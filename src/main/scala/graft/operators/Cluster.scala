@@ -43,7 +43,11 @@ object Cluster {
     * per-round shuffles run over |edge endpoints| rows, not |corpus| —
     * the difference between iterating over megabytes and over the full
     * 100 TB table. Edge-free nodes are singleton components and get
-    * label = id through one final left join. */
+    * label = id through one final left join.
+    *
+    * The distributed loop throws `IllegalStateException` when labels
+    * still change in round `maxIter` (the same runaway guard as
+    * [[kcoreGraph]]): truncated labels would split components silently. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 25, smallGraphMax: Long = SmallGraphEdges): DataFrame = {
     // undirected adjacency, materialized once — every round re-reads it.
@@ -116,6 +120,11 @@ object Cluster {
       done = changed == 0L
       iter += 1
     }
+    if (!done)
+      throw new IllegalStateException(
+        s"connected components still changing after $maxIter rounds — " +
+          "refusing to return unconverged labels; raise maxIter if a " +
+          "graph this deep is expected")
     // singleton components: every node with no edge labels itself
     nodes.join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))

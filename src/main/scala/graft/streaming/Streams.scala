@@ -188,68 +188,16 @@ object Streams {
         col("view_ts"), col("purchase_ts"), col("purchase_value"))
   }
 
-  /** Streaming MERGE sink (the reference's Delta `MERGE` from a stream,
-    * ugc_raw_to_cleansed.py + eu_raw_to_cleansed_merge.py): each
-    * micro-batch upserts into a versioned parquet snapshot —
-    * `path/v<batchId>` is the post-merge table, `path/_LATEST` names the
-    * current version. Returns the DataStreamWriter so the caller picks
-    * trigger/checkpoint options.
-    *
-    * Write protocol (stage → publish → claim):
-    *  1. the merge result lands in a UNIQUE staging dir — committed data
-    *     is never an overwrite target, so a racing or replayed writer
-    *     cannot clobber already-published files;
-    *  2. the staging dir is renamed to `v<v>` (atomic dir move; the
-    *     rename FAILS if the target exists, so the first publisher
-    *     wins and a loser just drops its staging copy);
-    *  3. `_commits/<v>` is claimed via atomic create-if-absent — the
-    *     log never references a version before its data is fully
-    *     published, so readers resolving the log never see a partial
-    *     or missing snapshot.
-    * A crash between publish and claim leaves an unreferenced `v<v>`
-    * dir; the stream's foreachBatch replay of that batch recomputes the
-    * identical merge (same base — see below), finds the target present,
-    * and completes the claim.
-    *
-    * The merge base is the latest version committed STRICTLY BELOW this
-    * batchId: on a foreachBatch replay the crashed attempt's own version
-    * must not be an input (reading and rewriting the same files wedges
-    * the stream), and versions ≥ batchId can only be earlier
-    * incarnations of this same batch.
-    *
-    * The micro-batch is read twice by the merge (union side and anti-join
-    * build side), so it goes through [[materialisedOnce]]: its source
-    * plan — a stateful dedup included — runs once per trigger. */
-  def upsertSink(stream: DataFrame, path: String, keys: Seq[String]):
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val base = latestCommittedVersionBelow(spark, path, batchId)
-      publishVersion(spark, path, batchId) { staging =>
-        materialisedOnce(batch) { b =>
-          base.fold(b)(v => graft.operators.Merge.upsertSnapshot(
-              spark.read.parquet(s"$path/v$v"), b, keys))
-            .write.mode("overwrite").parquet(staging.toString)
-        }
-      }
-    }
-
-  /** Stage → publish → claim (the protocol [[upsertSink]] documents):
-    * `stage` fills a fresh, uniquely named staging dir, which is renamed
-    * to `v<v>` unless that dir already exists, and `_commits/<v>` is
-    * claimed. */
-  private def publishVersion(spark: SparkSession, path: String, v: Long)(
+  /** Stage → publish → claim (the protocol [[upsertSinkBucketed]]
+    * documents): `stage` fills a fresh, uniquely named staging dir,
+    * which [[graft.ArtifactStore.publishStaged]] renames to `v<v>` unless
+    * that dir already exists, and `_commits/<v>` is claimed. A `stage`
+    * that throws leaves no staging dir and claims nothing. */
+  private[graft] def publishVersion(spark: SparkSession, path: String, v: Long)(
       stage: org.apache.hadoop.fs.Path => Unit): Unit = {
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(dir,
-      s"_staging-v$v-${java.util.UUID.randomUUID().toString.take(8)}")
-    stage(staging)
-    val target = new org.apache.hadoop.fs.Path(dir, s"v$v")
-    // exists-check first: some FileSystems rename INTO an existing dir
-    // rather than failing; a racing loser must drop its copy either way
-    val published = !fs.exists(target) && fs.rename(staging, target)
-    if (!published) fs.delete(staging, true)
+    graft.ArtifactStore.publishStaged(fs, new org.apache.hadoop.fs.Path(dir, s"v$v"))(stage)
     tryCommitVersion(spark, path, v) // false = already committed: done
   }
 
@@ -281,23 +229,43 @@ object Streams {
   private[graft] def bucketExpr(keys: Seq[String], numBuckets: Int) =
     pmod(hash(keys.map(col): _*), lit(numBuckets))
 
-  /** Bucketed incremental MERGE sink — [[upsertSink]]'s scale path. The
-    * plain sink rewrites the FULL snapshot every micro-batch (a 100 TB
-    * table rewritten per trigger); this one hash-buckets the snapshot by
-    * the merge key and each batch rewrites ONLY the buckets containing
-    * batch keys — per-trigger write cost is O(table/numBuckets ×
-    * touched buckets), not O(table).
+  /** Streaming MERGE sink (the reference's Delta `MERGE` from a stream,
+    * ugc_raw_to_cleansed.py + eu_raw_to_cleansed_merge.py): each
+    * micro-batch upserts into a versioned, hash-bucketed parquet
+    * snapshot. The snapshot is bucketed by the merge key and each batch
+    * rewrites ONLY the buckets containing batch keys — per-trigger write
+    * cost is O(table/numBuckets × touched buckets), not O(table).
+    * Returns the DataStreamWriter so the caller picks trigger/checkpoint
+    * options.
     *
     * Layout: `path/v<id>/__bucket=<b>/…` holds the rewritten buckets of
     * version `id`; `path/v<id>/_manifest` maps EVERY bucket to the
     * version whose files currently hold it (untouched buckets keep
     * pointing at older versions — their files are never rewritten, or
-    * even read). Publish order is the same stage → rename → claim
-    * protocol as [[upsertSink]], so readers resolving through
-    * `_commits` never see a partial version, and a foreachBatch replay
-    * recomputes the identical merge (the base resolves strictly below
-    * the replayed batchId). Old versions are swept by
-    * [[vacuumBucketed]] once no current manifest references them.
+    * even read). Old versions are swept by [[vacuumBucketed]] once no
+    * current manifest references them.
+    *
+    * Write protocol (stage → publish → claim, [[publishVersion]]):
+    *  1. the merge result and its manifest land in a UNIQUE staging dir
+    *     — committed data is never an overwrite target, so a racing or
+    *     replayed writer cannot clobber already-published files;
+    *  2. the staging dir is renamed to `v<id>` (atomic dir move; the
+    *     rename FAILS if the target exists, so the first publisher
+    *     wins and a loser just drops its staging copy);
+    *  3. `_commits/<id>` is claimed via atomic create-if-absent — the
+    *     log never references a version before its data is fully
+    *     published, so readers resolving the log never see a partial
+    *     or missing snapshot.
+    * A crash between publish and claim leaves an unreferenced `v<id>`
+    * dir; the stream's foreachBatch replay of that batch recomputes the
+    * identical merge (same base — see below), finds the target present,
+    * and completes the claim.
+    *
+    * The merge base is the latest version committed STRICTLY BELOW this
+    * batchId: on a foreachBatch replay the crashed attempt's own version
+    * must not be an input (reading and rewriting the same files wedges
+    * the stream), and versions ≥ batchId can only be earlier
+    * incarnations of this same batch.
     *
     * Each trigger runs the micro-batch's source plan (scan, parse,
     * stateful dedup) exactly once: [[mergeBucketedBatch]] materialises
@@ -472,15 +440,13 @@ object Streams {
 
   /** Optimistic commit of snapshot version `v`: atomically claims
     * `_commits/<v>` via create-if-absent (atomic on HDFS and local FS; on
-    * object stores use a conditional-put equivalent), then refreshes the
-    * `_LATEST` cache. Returns false when the version was already
-    * committed — a concurrent writer racing to the same version loses
-    * here BEFORE any reader can observe its data, which is the
-    * concurrent-writer story the versioned-parquet MERGE sink needs:
-    * multiple writers each claim latestCommittedVersion+1 and retry on
-    * false. The commit log, not `_LATEST`, is the source of truth, so a
-    * writer crashing between claim and pointer refresh can't strand
-    * readers on a stale pointer. */
+    * object stores use a conditional-put equivalent). Returns false when
+    * the version was already committed — a concurrent writer racing to
+    * the same version loses here BEFORE any reader can observe its data,
+    * which is the concurrent-writer story the versioned-parquet MERGE
+    * sink needs: multiple writers each claim latestCommittedVersion+1 and
+    * retry on false. The commit log is the only record of which versions
+    * are readable. */
   def tryCommitVersion(spark: SparkSession, path: String, v: Long): Boolean = {
     val dir = new org.apache.hadoop.fs.Path(path)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -488,9 +454,7 @@ object Streams {
     fs.mkdirs(commits)
     // createNewFile returns false (no throw) when the version is already
     // claimed; genuine IO failures propagate
-    val claimed = fs.createNewFile(new org.apache.hadoop.fs.Path(commits, v.toString))
-    if (claimed) writeLatestPointer(spark, path, v)
-    claimed
+    fs.createNewFile(new org.apache.hadoop.fs.Path(commits, v.toString))
   }
 
   /** Greatest committed version STRICTLY below `bound` — the merge-base
@@ -504,20 +468,10 @@ object Streams {
   def latestCommittedVersionBelow(spark: SparkSession, path: String,
       bound: Long): Option[Long] =
     committedVersions(spark, path).filter(_ < bound).maxOption
-      // pre-log tables: the _LATEST pointer is all there is
-      .orElse(latestCommittedVersion(spark, path).filter(_ < bound))
 
-  /** Highest committed version per the `_commits` log (source of truth);
-    * falls back to the `_LATEST` pointer for tables written before the
-    * log existed. */
+  /** Highest committed version per the `_commits` log. */
   def latestCommittedVersion(spark: SparkSession, path: String): Option[Long] =
-    committedVersions(spark, path).maxOption.orElse {
-      val latest = new org.apache.hadoop.fs.Path(path, "_LATEST")
-      val fs = latest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(latest))
-        scala.util.Try(readUtf8(fs, latest).trim.toLong).toOption
-      else None
-    }
+    committedVersions(spark, path).maxOption
 
   /** Every version id the `_commits` log names; empty without a log. */
   private def committedVersions(spark: SparkSession, path: String): Seq[Long] = {
@@ -528,52 +482,12 @@ object Streams {
       .flatMap(st => scala.util.Try(st.getPath.getName.toLong).toOption)
   }
 
-  /** Commit the `_LATEST` version pointer through the Hadoop FileSystem
-    * API — resolves against the table's own filesystem (HDFS/S3A/file),
-    * not the driver's local disk. Written to a temp file then renamed,
-    * which is atomic on HDFS; on S3A rename is copy+delete but the
-    * pointer is a single small object so readers see old-or-new, never
-    * partial. */
-  private[streaming] def writeLatestPointer(spark: SparkSession, path: String,
-      batchId: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s"_LATEST.tmp-$batchId")
-    val dst = new org.apache.hadoop.fs.Path(dir, "_LATEST")
-    val out = fs.create(tmp, true)
-    try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(dst, false)
-    if (!fs.rename(tmp, dst))
-      throw new java.io.IOException(s"failed to commit _LATEST pointer at $dst")
-  }
-
-  /** The latest committed snapshot written by [[upsertSink]], if any —
-    * resolved through the `_commits` log (see [[latestCommittedVersion]]),
-    * so readers never depend on the `_LATEST` cache being fresh. */
-  def currentSnapshot(spark: SparkSession, path: String): Option[DataFrame] =
-    latestCommittedVersion(spark, path)
-      .map(v => spark.read.parquet(s"$path/v$v"))
-
   // ---- time travel ----
-  // The versioned layouts already retain history (every committed v<id>
+  // The versioned layout already retains history (every committed v<id>
   // dir until vacuum); these readers expose it the way Delta's
   // `versionAsOf` does for the reference's Delta tables. A version
   // resolves ONLY through the `_commits` log — an uncommitted v<id> dir
   // (crash between publish and claim) is not a readable snapshot.
-
-  /** Snapshot of [[upsertSink]]'s table AS OF committed version `v`;
-    * None when `v` was never committed or its dir was vacuumed. */
-  def readVersion(spark: SparkSession, path: String, v: Long): Option[DataFrame] = {
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val committed = fs.exists(new org.apache.hadoop.fs.Path(dir, s"_commits/$v"))
-    val present = fs.exists(new org.apache.hadoop.fs.Path(dir, s"v$v"))
-    if (committed && present) Some(spark.read.parquet(s"$path/v$v")) else None
-  }
-
-  /** [[currentSnapshot]] under the time-travel name, for API symmetry. */
-  def readLatest(spark: SparkSession, path: String): Option[DataFrame] =
-    currentSnapshot(spark, path)
 
   /** Snapshot of [[upsertSinkBucketed]]'s table AS OF committed version
     * `v`: resolves THAT version's manifest, so each bucket reads from

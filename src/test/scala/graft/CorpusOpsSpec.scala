@@ -124,6 +124,22 @@ class CorpusOpsSpec extends SparkTestBase {
     assert(fast === loop)
   }
 
+  test("connectedComponents: the distributed loop throws rather than return unconverged labels") {
+    // path 0-1-...-63 needs several pointer-jumping rounds; one round
+    // cannot converge, and truncated labels would split the component
+    val n = 64
+    val nodes = (0 until n).map(_.toLong).toDF("id")
+    val edges = (0 until n - 1).map(i => (i.toLong, i.toLong + 1)).toDF("a_id", "b_id")
+    intercept[IllegalStateException] {
+      Cluster.connectedComponents(nodes, edges, maxIter = 1, smallGraphMax = 0)
+    }
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val loop = labels(Cluster.connectedComponents(nodes, edges, smallGraphMax = 0))
+    assert(loop === labels(Cluster.connectedComponents(nodes, edges)))
+    assert(loop.values.toSet === Set(0L))
+  }
+
   test("q46 clusters equal the transitive closure of the q23 pair set") {
     val docs = Tables.documents(spark, sfDir)
     val pairs = operators.ApproxDedup.ngramJaccard(docs)

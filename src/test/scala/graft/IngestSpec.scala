@@ -74,7 +74,8 @@ class IngestSpec extends SparkTestBase {
         parsed.select(col("guid").as("event_id"), col("title"), col("n"),
           col("ts"), col("ingestion_time")))
       .drop("ts")
-    val q = graft.streaming.Streams.upsertSink(cleansed, dir, Seq("event_id"))
+    val q = graft.streaming.Streams.upsertSinkBucketed(cleansed, dir, Seq("event_id"),
+        numBuckets = 4)
       .option("checkpointLocation", s"$dir/_ckpt").start()
     try {
       src.addData(
@@ -86,7 +87,7 @@ class IngestSpec extends SparkTestBase {
         ("k1", """{"guid":"g1","title":"t1","n":1}""", Timestamp.valueOf("2024-01-01 00:00:00")), // replay
         ("k3", """{"guid":"g3","title":"t3","n":3}""", Timestamp.valueOf("2024-01-01 00:03:00")))
       q.processAllAvailable()
-      val snap = graft.streaming.Streams.currentSnapshot(spark, dir).get
+      val snap = graft.streaming.Streams.readLatestBucketed(spark, dir).get
         .select("event_id", "n").collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(snap === Map("g1" -> 1L, "g2" -> 2L, "g3" -> 3L),

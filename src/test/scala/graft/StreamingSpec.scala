@@ -173,20 +173,21 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("upsertSink: micro-batches MERGE into a versioned snapshot (Hadoop file:// URI)") {
+  test("upsertSinkBucketed: micro-batches MERGE into a versioned snapshot (Hadoop file:// URI)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    // explicit scheme-qualified URI: the _LATEST pointer must go through
-    // the table path's Hadoop FileSystem, not the driver's local NIO
+    // explicit scheme-qualified URI: staging, rename, manifest and the
+    // _commits claim must go through the table path's Hadoop FileSystem,
+    // not the driver's local NIO
     val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_upsert").toString
     val src = MemoryStream[E]
-    val q = Streams.upsertSink(src.toDF(), dir, Seq("event_id")).start()
+    val q = Streams.upsertSinkBucketed(src.toDF(), dir, Seq("event_id"), numBuckets = 4).start()
     try {
       src.addData(E(1, ts(0), 1, "a", 1.0), E(2, ts(1), 1, "a", 2.0))
       q.processAllAvailable()
       src.addData(E(2, ts(2), 9, "b", 20.0), E(3, ts(3), 2, "a", 3.0)) // update id 2, insert 3
       q.processAllAvailable()
-      val snap = Streams.currentSnapshot(spark, dir).get.collect()
+      val snap = Streams.readLatestBucketed(spark, dir).get.collect()
         .map(r => r.getAs[Long]("event_id") ->
           (r.getAs[Long]("user_id"), r.getAs[Double]("value"))).toMap
       assert(snap.keySet === Set(1L, 2L, 3L))
@@ -254,34 +255,6 @@ class StreamingSpec extends SparkTestBase {
         "v1 not swept after the grace window elapsed")
       assert(fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v2")),
         "v2 still referenced by the latest manifest (untouched buckets)")
-    } finally q.stop()
-  }
-
-  test("time travel: readVersion returns each committed snapshot unchanged by later commits") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_tt").toString
-    val src = MemoryStream[E]
-    val q = Streams.upsertSink(src.toDF(), dir, Seq("event_id")).start()
-    def snap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("event_id"), r.getAs[Long]("user_id"),
-        r.getAs[Double]("value"))).sorted.toSeq
-    try {
-      src.addData(E(1, ts(0), 1, "a", 1.0), E(2, ts(1), 1, "a", 2.0))
-      q.processAllAvailable()
-      val v0 = snap(Streams.currentSnapshot(spark, dir).get)
-      src.addData(E(2, ts(2), 9, "b", 20.0), E(3, ts(3), 2, "a", 3.0))
-      q.processAllAvailable()
-      val v1 = snap(Streams.currentSnapshot(spark, dir).get)
-      src.addData(E(1, ts(4), 7, "c", -1.0))
-      q.processAllAvailable()
-      // every historical version reads back exactly as it was committed
-      assert(snap(Streams.readVersion(spark, dir, 0).get) === v0)
-      assert(snap(Streams.readVersion(spark, dir, 1).get) === v1)
-      assert(snap(Streams.readLatest(spark, dir).get) ===
-        snap(Streams.readVersion(spark, dir, 2).get))
-      // a version that was never committed is not a readable snapshot
-      assert(Streams.readVersion(spark, dir, 9).isEmpty)
     } finally q.stop()
   }
 
@@ -387,38 +360,28 @@ class StreamingSpec extends SparkTestBase {
   // union side, anti-join build side); each read of an unmaterialised
   // batch re-runs its stateful source plan, which the state store's
   // per-batch numRowsUpdated counts once per execution.
-  Seq[(String, (org.apache.spark.sql.DataFrame, String) =>
-      org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-      String => Option[org.apache.spark.sql.DataFrame])](
-    ("upsertSinkBucketed",
-      (df, dir) => Streams.upsertSinkBucketed(df, dir, Seq("event_id"), numBuckets = 4),
-      dir => Streams.readLatestBucketed(spark, dir)),
-    ("upsertSink",
-      (df, dir) => Streams.upsertSink(df, dir, Seq("event_id")),
-      dir => Streams.readLatest(spark, dir))
-  ).foreach { case (name, sink, read) =>
-    test(s"$name runs each micro-batch's stateful plan once and leaves no blocks behind") {
-      implicit val sqlCtx = spark.sqlContext
-      import spark.implicits._
-      val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_once").toString
-      val n = 40
-      val src = MemoryStream[E]
-      val persisted = spark.sparkContext.getPersistentRDDs.size
-      val q = sink(Streams.dedupReplays(src.toDF()), dir).start()
-      try {
-        // the second batch merges into the first's snapshot
-        src.addData((1 to n).map(i => E(i, ts(i % 30), i, "a", i.toDouble)): _*)
-        q.processAllAvailable()
-        src.addData((n + 1 to 2 * n).map(i => E(i, ts(30 + i % 30), i, "b", i.toDouble)): _*)
-        q.processAllAvailable()
-        val updated = q.recentProgress.filter(_.numInputRows > 0)
-          .map(_.stateOperators(0).numRowsUpdated).toSeq
-        assert(updated === Seq(n.toLong, n.toLong))
-        assert(read(dir).get.count() === 2 * n)
-        assert(spark.sparkContext.getPersistentRDDs.size <= persisted,
-          "a trigger left its materialised batch persisted")
-      } finally q.stop()
-    }
+  test("upsertSinkBucketed runs each micro-batch's stateful plan once and leaves no blocks behind") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_once").toString
+    val n = 40
+    val src = MemoryStream[E]
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val q = Streams.upsertSinkBucketed(Streams.dedupReplays(src.toDF()), dir,
+      Seq("event_id"), numBuckets = 4).start()
+    try {
+      // the second batch merges into the first's snapshot
+      src.addData((1 to n).map(i => E(i, ts(i % 30), i, "a", i.toDouble)): _*)
+      q.processAllAvailable()
+      src.addData((n + 1 to 2 * n).map(i => E(i, ts(30 + i % 30), i, "b", i.toDouble)): _*)
+      q.processAllAvailable()
+      val updated = q.recentProgress.filter(_.numInputRows > 0)
+        .map(_.stateOperators(0).numRowsUpdated).toSeq
+      assert(updated === Seq(n.toLong, n.toLong))
+      assert(Streams.readLatestBucketed(spark, dir).get.count() === 2 * n)
+      assert(spark.sparkContext.getPersistentRDDs.size <= persisted,
+        "a trigger left its materialised batch persisted")
+    } finally q.stop()
   }
 
   test("bucketed readers build a snapshot spanning 4 buckets and 2 versions in one Spark job") {
@@ -455,26 +418,30 @@ class StreamingSpec extends SparkTestBase {
     assert(rows(Streams.readLatestBucketed(spark, dir).get) === expected)
   }
 
-  test("upsertSink: replay heals a version published before a crash stole the claim") {
+  test("upsertSinkBucketed: replay heals a version published before a crash stole the claim") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_heal").toString
-    // simulate a crashed incarnation: batch 0's data fully published at
-    // v0 but the process died before claiming _commits/0
-    Seq(E(1, ts(0), 1, "a", 1.0)).toDF().write.parquet(s"$dir/v0")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // simulate a crashed incarnation: batch 0's bucket and manifest fully
+    // published at v0 but the process died before claiming _commits/0
+    val b = spark.range(1, 2).select(Streams.bucketExpr(Seq("id"), 4)).first().getInt(0)
+    Seq(E(1, ts(0), 1, "a", 1.0)).toDF().write.parquet(s"$dir/v0/__bucket=$b")
+    val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/v0/_manifest"))
+    try out.write(s"$b:0".getBytes("UTF-8")) finally out.close()
     assert(Streams.latestCommittedVersion(spark, dir) === None)
     val src = MemoryStream[E]
-    val q = Streams.upsertSink(src.toDF(), dir, Seq("event_id")).start()
+    val q = Streams.upsertSinkBucketed(src.toDF(), dir, Seq("event_id"), numBuckets = 4).start()
     try {
       src.addData(E(1, ts(0), 1, "a", 1.0)) // the replayed batch 0
       q.processAllAvailable()
       // claim completed, published data intact, no read-own-write crash
       assert(Streams.latestCommittedVersion(spark, dir) === Some(0L))
-      val snap = Streams.currentSnapshot(spark, dir).get.collect()
+      assert(Streams.readManifest(spark, dir, 0) === Map(b -> 0L))
+      val snap = Streams.readLatestBucketed(spark, dir).get.collect()
       assert(snap.length === 1 && snap.head.getAs[Long]("event_id") === 1L)
       // no staging leftovers
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val staged = fs.listStatus(new org.apache.hadoop.fs.Path(dir))
         .map(_.getPath.getName).filter(_.startsWith("_staging"))
       assert(staged.isEmpty, s"staging dirs left behind: ${staged.mkString(",")}")
@@ -495,24 +462,32 @@ class StreamingSpec extends SparkTestBase {
     assert(out === Map("k1" -> false, "k2" -> false, "k3" -> true))
   }
 
-  test("commit log: concurrent claim loses, readers survive a stale _LATEST") {
-    import spark.implicits._
+  test("commit log: a concurrent claim of the same version loses") {
     val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_commits").toString
-    Seq((1L, "a")).toDF("id", "x").write.parquet(s"$dir/v0")
     assert(Streams.tryCommitVersion(spark, dir, 0L))
     // a second writer racing to the same version must lose the claim
     assert(!Streams.tryCommitVersion(spark, dir, 0L))
     assert(Streams.latestCommittedVersion(spark, dir) === Some(0L))
-    // writer crashes between claiming v1 and refreshing _LATEST: commit
-    // the data + log entry by hand, then corrupt the pointer — readers
-    // must still resolve v1 through the log
-    Seq((1L, "a"), (2L, "b")).toDF("id", "x").write.parquet(s"$dir/v1")
+    // the next version's claim is what readers resolve, no pointer needed
     assert(Streams.tryCommitVersion(spark, dir, 1L))
+    assert(Streams.latestCommittedVersion(spark, dir) === Some(1L))
+  }
+
+  test("publishVersion: a stage that throws leaves no staging dir, no version and no claim") {
+    val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_leak").toString
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(dir + "/_LATEST"), false)
-    assert(Streams.latestCommittedVersion(spark, dir) === Some(1L))
-    assert(Streams.currentSnapshot(spark, dir).get.count() === 2L)
+    intercept[RuntimeException] {
+      Streams.publishVersion(spark, dir, 3L) { staging =>
+        fs.mkdirs(staging)
+        fs.create(new org.apache.hadoop.fs.Path(staging, "part-00000.parquet")).close()
+        throw new RuntimeException("merge write failed")
+      }
+    }
+    val names = fs.listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath.getName)
+    assert(!names.exists(_.startsWith("_staging-")), s"staging left behind: ${names.mkString(",")}")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/v3")), "a failed stage published")
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_commits/3")), "a failed stage claimed")
   }
 
   test("intervalJoinStream: purchases join prior views within the window, across micro-batches") {
