@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.Tables
 
 /** Streaming operators (reference analog: the Kafka→raw/cleansed
@@ -239,11 +240,18 @@ object Streams {
     * options.
     *
     * Layout: `path/v<id>/__bucket=<b>/…` holds the rewritten buckets of
-    * version `id`; `path/v<id>/_manifest` maps EVERY bucket to the
-    * version whose files currently hold it (untouched buckets keep
-    * pointing at older versions — their files are never rewritten, or
-    * even read). Old versions are swept by [[vacuumBucketed]] once no
-    * current manifest references them.
+    * version `id`, ONE parquet file per bucket: the merge result is
+    * hash-partitioned into `numBuckets` write tasks on the merge key(s)
+    * with the function [[bucketExpr]] computes, so write task `b` holds
+    * bucket `b` and nothing else (Hive's bucketed layout; `numBuckets`
+    * is also the write parallelism). `path/v<id>/_manifest` maps EVERY
+    * bucket to the version whose files currently hold it (untouched
+    * buckets keep pointing at older versions — their files are never
+    * rewritten, or even read), and carries one `schema:` line, the JSON
+    * schema of the table's files as parquet stores them, so readers
+    * (the merge base included) skip footer inference. Old versions are
+    * swept by [[vacuumBucketed]] once no current manifest references
+    * them.
     *
     * Write protocol (stage → publish → claim, [[publishVersion]]):
     *  1. the merge result and its manifest land in a UNIQUE staging dir
@@ -289,50 +297,57 @@ object Streams {
     * anti-join sides read those blocks, so a stream's source plan runs
     * once per trigger. A batch that touches no bucket (every no-data
     * trigger) publishes its manifest-only version without a Spark
-    * write. */
+    * write. In a stateful stream, which runs without adaptive execution,
+    * a data trigger runs three jobs: the touched-bucket collect, the
+    * anti-join's broadcast build and the write. */
   def mergeBucketedBatch(batch: DataFrame, path: String, keys: Seq[String],
       numBuckets: Int, batchId: Long): Unit = {
     val spark = batch.sparkSession
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val prevManifest: Map[Int, Long] =
-      latestCommittedVersionBelow(spark, path, batchId)
-        .map(v => readManifest(spark, path, v)).getOrElse(Map.empty)
+    val prev = latestCommittedVersionBelow(spark, path, batchId)
+      .map(v => readManifestAndSchema(spark, path, v)).getOrElse(Manifest(Map.empty, None))
     publishVersion(spark, path, batchId) { staging =>
-      val touched = materialisedOnce(
+      val (touched, schema) = materialisedOnce(
           batch.withColumn("__bucket", bucketExpr(keys, numBuckets))) { bb =>
         // ≤ numBuckets values — a bounded driver collect, not a data collect
         val touched = bb.select("__bucket").distinct().collect()
           .map(_.getInt(0)).sorted
-        if (touched.isEmpty) fs.mkdirs(staging)
+        if (touched.isEmpty) { fs.mkdirs(staging); (touched, prev.schema) }
         else {
           // a key's bucket never changes, so re-deriving `__bucket` on
           // the base rows gives each row the bucket its dir is named for
           val base = readBuckets(spark, path,
-            touched.flatMap(b => prevManifest.get(b).map(b -> _)))
-          base.fold(bb)(b => graft.operators.Merge.upsertSnapshot(
-              b.withColumn("__bucket", bucketExpr(keys, numBuckets)), bb, keys))
+            prev.copy(buckets = touched.flatMap(b => prev.buckets.get(b).map(b -> _)).toMap))
+          val merged = base.fold(bb)(b => graft.operators.Merge.upsertSnapshot(
+            b.withColumn("__bucket", bucketExpr(keys, numBuckets)), bb, keys))
+          // hash partitioning is pmod(murmur3(keys, 42), n) = bucketExpr,
+          // so task b writes bucket b's one file; the count is explicit so
+          // adaptive execution cannot coalesce the exchange
+          merged.repartition(numBuckets, keys.map(col): _*)
             .write.mode("overwrite").partitionBy("__bucket").parquet(staging.toString)
+          (touched, Some(org.apache.spark.sql.graftbridge.ColumnBridge
+            .asNullable(merged.drop("__bucket").schema)))
         }
-        touched
       }
       // manifest rides INSIDE the staged version dir, so the rename
       // publishes data + manifest atomically together
-      writeManifest(fs, staging, prevManifest ++ touched.map(_ -> batchId))
+      writeManifest(fs, staging, Manifest(prev.buckets ++ touched.map(_ -> batchId), schema))
     }
   }
 
-  /** One scan over the bucket dirs named by `buckets` (bucket → version):
-    * a single file index and one footer-inference job however many
-    * buckets and versions it spans. Each bucket dir is a root of the
-    * scan, so `__bucket` is not read back as a column. The schema is
-    * inferred, not taken from a caller, so a base whose columns differ
-    * from a batch's fails at the merge's `unionByName`. None when
-    * `buckets` is empty. */
-  private def readBuckets(spark: SparkSession, path: String,
-      buckets: Iterable[(Int, Long)]): Option[DataFrame] =
-    if (buckets.isEmpty) None
-    else Some(spark.read.parquet(buckets.toSeq.sorted
+  /** One scan over the bucket dirs `m` names (bucket → version): a
+    * single file index however many buckets and versions it spans. Each
+    * bucket dir is a root of the scan, so `__bucket` is not read back as
+    * a column. With the manifest's schema the read starts no Spark job;
+    * without one (a manifest written before the schema line existed)
+    * the schema is inferred from the footers in one job. The stored
+    * schema is what inference returns, so a base whose columns differ
+    * from a batch's still fails at the merge's `unionByName`. None when
+    * `m` names no bucket. */
+  private def readBuckets(spark: SparkSession, path: String, m: Manifest): Option[DataFrame] =
+    if (m.buckets.isEmpty) None
+    else Some(m.schema.fold(spark.read)(s => spark.read.schema(s)).parquet(m.buckets.toSeq.sorted
       .map { case (b, v) => s"$path/v$v/__bucket=$b" }: _*))
 
   /** The latest bucketed snapshot: each bucket read from the version the
@@ -341,7 +356,7 @@ object Streams {
     * committed). */
   def currentSnapshotBucketed(spark: SparkSession, path: String): Option[DataFrame] =
     latestCommittedVersion(spark, path)
-      .flatMap(v => readBuckets(spark, path, readManifest(spark, path, v)))
+      .flatMap(v => readBuckets(spark, path, readManifestAndSchema(spark, path, v)))
 
   /** q42's daily-ingest loop under Structured Streaming — the
     * reference's qdrant-deduplicator batch loop
@@ -407,23 +422,38 @@ object Streams {
     }
   }
 
+  /** A version's `_manifest`: one `<bucket>:<version>` line per bucket,
+    * and a `schema:<json>` line once any version has written files. */
+  private case class Manifest(buckets: Map[Int, Long], schema: Option[StructType])
+
+  private val SchemaLine = "schema:"
+
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-      versionDir: org.apache.hadoop.fs.Path, m: Map[Int, Long]): Unit = {
+      versionDir: org.apache.hadoop.fs.Path, m: Manifest): Unit = {
     val out = fs.create(new org.apache.hadoop.fs.Path(versionDir, "_manifest"), true)
-    try out.write(m.toSeq.sorted.map { case (b, v) => s"$b:$v" }
-      .mkString("\n").getBytes("UTF-8"))
+    try out.write((m.buckets.toSeq.sorted.map { case (b, v) => s"$b:$v" } ++
+        m.schema.map(SchemaLine + _.json)).mkString("\n").getBytes("UTF-8"))
     finally out.close()
   }
 
   private[graft] def readManifest(spark: SparkSession, path: String,
-      v: Long): Map[Int, Long] = {
+      v: Long): Map[Int, Long] = readManifestAndSchema(spark, path, v).buckets
+
+  private def readManifestAndSchema(spark: SparkSession, path: String,
+      v: Long): Manifest = {
     val p = new org.apache.hadoop.fs.Path(s"$path/v$v/_manifest")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else readUtf8(fs, p).split("\n").iterator.filter(_.nonEmpty).map { line =>
-      val Array(b, ver) = line.split(":")
-      b.toInt -> ver.toLong
-    }.toMap
+    if (!fs.exists(p)) Manifest(Map.empty, None)
+    else {
+      val (schema, buckets) = readUtf8(fs, p).split("\n").toSeq.filter(_.nonEmpty)
+        .partition(_.startsWith(SchemaLine))
+      Manifest(buckets.map { line =>
+          val Array(b, ver) = line.split(":")
+          b.toInt -> ver.toLong
+        }.toMap,
+        schema.headOption.map(l =>
+          DataType.fromJson(l.drop(SchemaLine.length)).asInstanceOf[StructType]))
+    }
   }
 
   private def readUtf8(fs: org.apache.hadoop.fs.FileSystem,
@@ -503,8 +533,8 @@ object Streams {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(dir, s"_commits/$v"))) None
     else {
-      val m = readManifest(spark, path, v)
-      if (m.exists { case (b, ver) =>
+      val m = readManifestAndSchema(spark, path, v)
+      if (m.buckets.exists { case (b, ver) =>
         !fs.exists(new org.apache.hadoop.fs.Path(dir, s"v$ver/__bucket=$b")) }) None
       else readBuckets(spark, path, m)
     }

@@ -3,6 +3,14 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** Row types of [[ScaleUp]]'s typed maps. Top-level and public: the
+  * encoders' generated Java calls their accessors, and janino refuses
+  * to call into a class declared private in an object, which sends
+  * those plans to interpreted projections. */
+case class ScaledDoc(doc_id: Long, text: String, lang: String, source: String,
+    n_chars: Long)
+case class ScaledVec(vec_id: Long, embedding: Array[Float], label: Int)
+
 /** Deterministic scale-up generator: replicates an existing test-data dir
   * R× into a larger scale factor (sf0.1 × 10 → sf1) so the scale claims
   * in SURVEY §4/§6 can be MEASURED instead of argued from plan shapes.
@@ -106,9 +114,6 @@ object ScaleUp {
     save("embeddings", scaledEmbeddings(spark, load("embeddings"), replicas), 8)
   }
 
-  private case class Doc(doc_id: Long, text: String, lang: String,
-      source: String, n_chars: Long)
-
   /** Replica 0 = the source bytes; replica r>0 = same docs, words
     * shuffled by an RNG seeded from (r, md5(text)). Seeding from the
     * TEXT, not the doc_id, is what preserves duplicate clusters: two
@@ -121,7 +126,7 @@ object ScaleUp {
     val reps = spark.range(replicas).select(col("id").cast("int").as("__r"))
     docs.crossJoin(reps).as[(Long, String, String, String, Long, Int)]
       .map { case (id, text, lang, source, nChars, r) =>
-        if (r == 0 || text == null) Doc(id + r * docStride, text, lang, source, nChars)
+        if (r == 0 || text == null) ScaledDoc(id + r * docStride, text, lang, source, nChars)
         else {
           val md = java.security.MessageDigest.getInstance("MD5")
             .digest(text.getBytes("UTF-8"))
@@ -135,12 +140,10 @@ object ScaleUp {
             i -= 1
           }
           val shuffled = words.mkString(" ")
-          Doc(id + r * docStride, shuffled, lang, source, shuffled.length.toLong)
+          ScaledDoc(id + r * docStride, shuffled, lang, source, shuffled.length.toLong)
         }
       }.toDF()
   }
-
-  private case class Vec(vec_id: Long, embedding: Array[Float], label: Int)
 
   /** Replica 0 = the source bytes; replica r>0 = every vector rotated by
     * one seeded random orthonormal matrix (Gaussian + Gram-Schmidt).
@@ -172,7 +175,7 @@ object ScaleUp {
               acc.toFloat
             }
           }
-        Vec(id + r * vecStride, out, label)
+        ScaledVec(id + r * vecStride, out, label)
       }.toDF()
   }
 

@@ -1,6 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.Properties
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.graft.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -27,17 +30,22 @@ trait SparkTestBase extends AnyFunSuite {
     * host load, so a spec can pin them exactly; the listener bus is
     * drained on both sides so every job of `body`, and only those, is
     * counted. */
-  def jobsDuring(body: => Any): Int = {
-    val jobs = new AtomicInteger
+  def jobsDuring(body: => Any): Int = jobPropertiesDuring(body).size
+
+  /** The local properties of each Spark job started while `body` runs
+    * (e.g. `streaming.sql.batchId`, to count one micro-batch's jobs). */
+  def jobPropertiesDuring(body: => Any): Seq[Properties] = {
+    val jobs = new ConcurrentLinkedQueue[Properties]
     val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties).getOrElse(new Properties))
     }
     ListenerBus.drain(spark.sparkContext)
     spark.sparkContext.addSparkListener(l)
     try {
       body
       ListenerBus.drain(spark.sparkContext)
-      jobs.get
+      jobs.asScala.toSeq
     } finally spark.sparkContext.removeSparkListener(l)
   }
 }

@@ -384,7 +384,7 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("bucketed readers build a snapshot spanning 4 buckets and 2 versions in one Spark job") {
+  test("bucketed readers build a snapshot spanning 4 buckets and 2 versions without a Spark job") {
     import spark.implicits._
     val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_readjobs").toString
     def batch(ids: Seq[Long], v: Double) = ids.map(k => E(k, ts(k.toInt), k, "a", v)).toDF()
@@ -392,8 +392,83 @@ class StreamingSpec extends SparkTestBase {
     Streams.mergeBucketedBatch(batch(Seq(1L), 2.0), dir, Seq("event_id"), 4, 1L)
     val m = Streams.readManifest(spark, dir, 1)
     assert(m.size === 4 && m.values.toSet === Set(0L, 1L))
-    assert(jobsDuring(Streams.readLatestBucketed(spark, dir).get) <= 1)
-    assert(jobsDuring(Streams.readVersionBucketed(spark, dir, 1).get) <= 1)
+    // the manifest carries the schema, so no footer-inference job
+    assert(jobsDuring(Streams.readLatestBucketed(spark, dir).get) === 0)
+    assert(jobsDuring(Streams.readVersionBucketed(spark, dir, 1).get) === 0)
+  }
+
+  // The benchmark's shape: a file source and stateful dedup. A stateful
+  // micro-batch runs without adaptive execution, so each shuffle is a
+  // stage of its action's job, not a job of its own.
+  test("upsertSinkBucketed: a data trigger onto an existing version runs at most 3 Spark jobs") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_trigjobs").toString
+    val (in, dir) = (s"$root/in", s"file://$root/sink")
+    def land(ids: Seq[Long], v: Double): Unit = ids.map(i => E(i, ts(i.toInt % 60), i, "a", v))
+      .toDF().coalesce(1).write.mode("append").json(in)
+    land(1L to 32L, 1.0)
+    val stream = spark.readStream.schema(org.apache.spark.sql.Encoders.product[E].schema).json(in)
+    val q = Streams.upsertSinkBucketed(Streams.dedupReplays(stream), dir, Seq("event_id"),
+      numBuckets = 4).start()
+    try {
+      q.processAllAvailable()
+      val started = jobPropertiesDuring { land(33L to 40L, 2.0); q.processAllAvailable() }
+      val data = q.recentProgress.filter(_.numInputRows > 0).last.batchId.toString
+      // touched-bucket collect, broadcast build, write: the merge base is
+      // read with the manifest's schema, not inferred
+      val jobs = started.count(_.getProperty("streaming.sql.batchId") == data)
+      assert(jobs <= 3, s"$jobs jobs")
+      assert(Streams.readLatestBucketed(spark, dir).get.count() === 40)
+    } finally q.stop()
+  }
+
+  test("mergeBucketedBatch writes one file per touched bucket from a multi-partition batch") {
+    import spark.implicits._
+    val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_layout").toString
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def batch(ids: Seq[Long], v: Double) =
+      ids.map(k => E(k, ts(k.toInt % 60), k, "a", v)).toDF().repartition(8)
+    Streams.mergeBucketedBatch(batch(1L to 64L, 1.0), dir, Seq("event_id"), 4, 0L)
+    Streams.mergeBucketedBatch(batch(1L to 64L by 3, 2.0), dir, Seq("event_id"), 4, 1L)
+    val bucketDirs = Seq(0L, 1L).flatMap(v =>
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/v$v"))
+        .filter(_.getPath.getName.startsWith("__bucket=")).map(_.getPath))
+    assert(bucketDirs.size === 8, bucketDirs.mkString(","))
+    bucketDirs.foreach { d =>
+      val files = fs.listStatus(d).map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      assert(files.length === 1, s"$d holds ${files.mkString(",")}")
+    }
+    val snap = Streams.readLatestBucketed(spark, dir).get
+      .select("event_id", "value").as[(Long, Double)].collect().toMap
+    assert(snap === (1L to 64L).map(k => k -> (if (k % 3 == 1) 2.0 else 1.0)).toMap)
+  }
+
+  test("the manifest's schema is the one inference reads from the table's files") {
+    import spark.implicits._
+    val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_schema").toString
+    // non-nullable top-level, struct and array fields: parquet stores them all nullable
+    val batch = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+      .select(col("k"), col("v"), struct(col("k").as("kk"), lit(1).as("one")).as("s"),
+        array(col("k")).as("arr"))
+    Streams.mergeBucketedBatch(batch, dir, Seq("k"), 4, 0L)
+    val dirs = Streams.readManifest(spark, dir, 0).toSeq.map { case (b, v) => s"$dir/v$v/__bucket=$b" }
+    assert(Streams.readLatestBucketed(spark, dir).get.schema ===
+      spark.read.parquet(dirs: _*).schema)
+  }
+
+  test("mergeBucketedBatch: a batch whose columns differ from the table's fails at the merge") {
+    import spark.implicits._
+    val dir = "file://" + java.nio.file.Files.createTempDirectory("graft_mismatch").toString
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Streams.mergeBucketedBatch(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), dir, Seq("k"), 4, 0L)
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Streams.mergeBucketedBatch(Seq((1L, 9.0)).toDF("k", "w"), dir, Seq("k"), 4, 1L)
+    }
+    assert(Streams.latestCommittedVersion(spark, dir) === Some(0L))
+    val names = fs.listStatus(new org.apache.hadoop.fs.Path(dir)).map(_.getPath.getName)
+    assert(!names.exists(n => n.startsWith("_staging-") || n == "v1"), names.mkString(","))
   }
 
   test("mergeBucketedBatch equals a chained Merge.upsertSnapshot, NULL keys and " +
