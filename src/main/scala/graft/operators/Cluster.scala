@@ -12,15 +12,57 @@ import graft.Tables
   * one id only by scan order; connected components computes the same
   * closure order-independently, the way a distributed engine must.
   *
-  * Scale notes: the iteration is min-label propagation with pointer
-  * jumping — each round is two equi-join shuffles on node id, and the
-  * label tree height halves per round, so rounds = O(log diameter).
-  * Near-dup clusters are shallow (dozens of members, diameter ≤ a few
-  * hops), so this converges in 2-3 rounds at any corpus size; the edge
-  * list is checkpointed once and reused. No driver-side data beyond the
-  * one-row convergence check per round.
+  * Scale notes: a pair graph of at most [[SmallGraphEdges]] (2^22)
+  * undirected edge rows is labeled by ONE single-task union-find; above
+  * that, the iteration is min-label propagation with pointer jumping —
+  * each round is two equi-join shuffles on node id, and the label tree
+  * height halves per round, so rounds = O(log diameter). Near-dup
+  * clusters are shallow (dozens of members, diameter ≤ a few hops), so
+  * the loop converges in 2-3 rounds at any corpus size; the edge list is
+  * checkpointed once and reused. No driver-side data beyond the one-row
+  * convergence check per round. The graph operators build their
+  * adjacency with [[undirected]]; the data-dependent loops (this one, the
+  * k-core peel) share [[iterateToFixpoint]], and the fixed-round ones
+  * (label propagation, PageRank, hops) fold over the rounds their oracles
+  * unroll.
   */
 object Cluster {
+
+  /** Both directions of every (a_id, b_id) edge as (src, dst): the
+    * undirected adjacency the graph operators walk. */
+  private def undirected(edges: DataFrame): DataFrame =
+    edges.select(col("a_id").as("src"), col("b_id").as("dst"))
+      .unionByName(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
+
+  /** [[undirected]] hash-partitioned on `key` and checkpointed once: the
+    * checkpoint keeps the partitioning, so every later join on `key`
+    * leaves the 2|E| edge side in place and moves only the other side. */
+  private def undirectedOn(edges: DataFrame, key: String): DataFrame =
+    undirected(edges).repartition(col(key)).localCheckpoint()
+
+  /** The one round loop of the data-dependent graph operators: from
+    * `init` (already converged when `done`), each `round`'s frame is
+    * `localCheckpoint`ed and handed with the previous state to `settle`,
+    * the caller's convergence test on that checkpointed frame, which
+    * returns the next state and whether it is the fixpoint. Still not
+    * converged after `maxRounds` rounds THROWS: truncated output is
+    * silently wrong (split components, a superset core). */
+  private def iterateToFixpoint[S](init: S, done: Boolean, maxRounds: Int,
+      what: String)(round: S => DataFrame)(
+      settle: (S, DataFrame) => (S, Boolean)): S = {
+    @annotation.tailrec
+    def go(s: S, done: Boolean, n: Int): S =
+      if (done) s
+      else if (n == maxRounds)
+        throw new IllegalStateException(
+          s"$what still changing after $maxRounds rounds — refusing to " +
+            "truncate; raise the round cap if a graph this deep is expected")
+      else {
+        val (next, fixed) = settle(s, round(s).localCheckpoint())
+        go(next, fixed, n + 1)
+      }
+    go(init, done, 0)
+  }
 
   /** Below this undirected-edge count the min-label fixpoint runs as ONE
     * single-task union-find instead of the distributed join loop: on a
@@ -45,24 +87,18 @@ object Cluster {
     * 100 TB table. Edge-free nodes are singleton components and get
     * label = id through one final left join.
     *
-    * The distributed loop throws `IllegalStateException` when labels
-    * still change in round `maxIter` (the same runaway guard as
-    * [[kcoreGraph]]): truncated labels would split components silently. */
+    * The distributed loop runs through [[iterateToFixpoint]], so it
+    * throws `IllegalStateException` when labels still change in round
+    * `maxIter`: truncated labels would split components silently. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 25, smallGraphMax: Long = SmallGraphEdges): DataFrame = {
-    // undirected adjacency, materialized once — every round re-reads it.
-    // Pre-partitioned by dst before the checkpoint: LogicalRDD keeps the
-    // partitioning, so the per-round neighbor join never re-shuffles the
-    // edge side (2|E| rows, the largest frame in the loop) — only the
-    // labels side moves each round.
-    val und = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .repartition(col("dst"))
-      .localCheckpoint()
-    if (und.count() <= smallGraphMax) {
+    // keyed by dst: each round's neighbor join moves only the labels
+    // side, never the 2|E| edge side (the largest frame in the loop)
+    val und = undirectedOn(edges, "dst")
+    val labels = if (und.count() <= smallGraphMax) {
       val spark = nodes.sparkSession
       import spark.implicits._
-      val labels = und
+      und
         .filter(col("src").isNotNull && col("dst").isNotNull)
         .select(col("src").cast("long"), col("dst").cast("long"))
         .as[(Long, Long)]
@@ -91,14 +127,10 @@ object Cluster {
           keys.iterator.map(k => (k, find(k)))
         }
         .toDF("id", "label")
-      return nodes.join(labels, Seq("id"), "left")
-        .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-    }
-    var labels = und.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")).localCheckpoint()
-    var iter = 0
-    var done = false
-    while (!done && iter < maxIter) {
+    } else iterateToFixpoint(
+        und.select(col("src").as("id")).distinct()
+          .select(col("id"), col("id").as("label")).localCheckpoint(),
+        done = false, maxIter, "connected components") { labels =>
       // 1) neighbor-min: label <- min(label, min of neighbors' labels)
       val nbr = und
         .join(labels.select(col("id").as("dst"), col("label").as("dlabel")), Seq("dst"))
@@ -112,19 +144,12 @@ object Cluster {
       // check scans the checkpointed frame: no extra join back to
       // `labels`, one fewer shuffle per round.
       val parent = prop.select(col("id").as("pid"), col("label").as("plabel"))
-      val jumped = prop.join(parent, prop("label") === parent("pid"))
+      prop.join(parent, prop("label") === parent("pid"))
         .select(prop("id"), prop("old_label"), col("plabel").as("label"))
-        .localCheckpoint() // truncate lineage between rounds
-      val changed = jumped.filter(col("label") =!= col("old_label")).limit(1).count()
-      labels = jumped.select("id", "label")
-      done = changed == 0L
-      iter += 1
+    } { (_, jumped) =>
+      (jumped.select("id", "label"),
+        jumped.filter(col("label") =!= col("old_label")).limit(1).count() == 0L)
     }
-    if (!done)
-      throw new IllegalStateException(
-        s"connected components still changing after $maxIter rounds — " +
-          "refusing to return unconverged labels; raise maxIter if a " +
-          "graph this deep is expected")
     // singleton components: every node with no edge labels itself
     nodes.join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("label"))
@@ -190,26 +215,22 @@ object Cluster {
     * total order) and KEEPS its previous label when no labeled
     * neighbor exists; integer vote counts only.
     *
-    * Scale notes: same loop shape as [[connectedComponents]] — the
-    * undirected edge frame is checkpointed once, pre-partitioned by
-    * src so each round only shuffles the (node-sized) label frame into
-    * the join plus one edge-sized vote aggregation; rounds are fixed,
-    * and only edge-touched nodes can ever change, so per-round work is
-    * O(|E|) regardless of corpus size. */
+    * Scale notes: the undirected edge frame is [[undirectedOn]] src —
+    * checkpointed once, pre-partitioned so each round only shuffles the
+    * (node-sized) label frame into the join plus one edge-sized vote
+    * aggregation; rounds are fixed, and only edge-touched nodes can ever
+    * change, so per-round work is O(|E|) regardless of corpus size. */
   def labelPropagation(s: SparkSession, dir: String): DataFrame =
     labelPropagationGraph(Tables.documents(s, dir),
       pairsTable(s, dir).select("a_id", "b_id"))
 
   def labelPropagationGraph(docs: DataFrame, edges: DataFrame): DataFrame = {
-    val und = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint()
-    var cur = docs.select(col("doc_id"),
+    val und = undirectedOn(edges, "src")
+    val seeded = docs.select(col("doc_id"),
       when(col("doc_id") % LpSeedMod === 0, coalesce(col("lang"), lit("")))
         .as("label"))
       .localCheckpoint()
-    for (_ <- 1 to LpRounds) {
+    val labels = (1 to LpRounds).foldLeft(seeded) { (cur, _) =>
       val votes = und
         .join(cur.select(col("doc_id").as("src"), col("label").as("slabel")),
           Seq("src"))
@@ -224,13 +245,13 @@ object Cluster {
       val best = votes.groupBy(col("dst"))
         .agg(min(struct((-col("c")).as("nc"), col("slabel"))).as("m"))
         .select(col("dst"), col("m.slabel").as("blabel"))
-      cur = cur.join(best, cur("doc_id") === best("dst"), "left")
+      cur.join(best, cur("doc_id") === best("dst"), "left")
         .select(col("doc_id"),
           when(col("doc_id") % LpSeedMod === 0, col("label"))
             .otherwise(coalesce(col("blabel"), col("label"))).as("label"))
         .localCheckpoint()
     }
-    cur.select(col("doc_id"), coalesce(col("label"), lit("")).as("label"))
+    labels.select(col("doc_id"), coalesce(col("label"), lit("")).as("label"))
       .orderBy("doc_id")
   }
 
@@ -250,21 +271,17 @@ object Cluster {
     * so the per-round shuffles scan |E|, not |corpus|. Mass parked on
     * isolated nodes leaks (no dangling redistribution) — deliberate,
     * documented, and identical in the oracle. */
-  def pagerank(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    pagerankGraph(docs.select(col("doc_id").as("id")),
-      pairsTable(s, dir), docs.count())
-      .select(col("id").as("doc_id"), col("pr_int"))
-      .orderBy("doc_id")
-  }
+  def pagerank(s: SparkSession, dir: String): DataFrame =
+    pagerankOf(Tables.documents(s, dir), pairsTable(s, dir))
 
   /** Frame-API variant computing the edges inline (no materialization). */
-  def pagerank(docs: DataFrame): DataFrame = {
-    val edges = ApproxDedup.ngramJaccardPairs(docs).select("a_id", "b_id")
+  def pagerank(docs: DataFrame): DataFrame =
+    pagerankOf(docs, ApproxDedup.ngramJaccardPairs(docs).select("a_id", "b_id"))
+
+  private def pagerankOf(docs: DataFrame, edges: DataFrame): DataFrame =
     pagerankGraph(docs.select(col("doc_id").as("id")), edges, docs.count())
       .select(col("id").as("doc_id"), col("pr_int"))
       .orderBy("doc_id")
-  }
 
   /** Integer PageRank over explicit undirected pair edges; `nTotal` is
     * the full node population (isolated nodes get the closed-form base
@@ -274,18 +291,17 @@ object Cluster {
     // by definition, so the typed empty result is the answer
     if (nTotal == 0L)
       return nodes.select(col("id"), lit(0L).as("pr_int"))
-    val und = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
+    val und = undirected(edges)
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     // (src, dst, deg) materialized once; every round re-reads it
     val undDeg = und.join(deg, Seq("src")).localCheckpoint()
     val r0 = PrMass / nTotal
     val base = 15L * r0 / 100L
-    var rank = undDeg.select(col("src").as("id")).distinct()
+    val rank0 = undDeg.select(col("src").as("id")).distinct()
       .withColumn("r", lit(r0)).localCheckpoint()
-    for (_ <- 1 to PrRounds) {
-      rank = undDeg
-        .join(rank.withColumnRenamed("id", "src"), Seq("src"))
+    val rank = (1 to PrRounds).foldLeft(rank0) { (prev, _) =>
+      undDeg
+        .join(prev.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id"), expr("r DIV deg").as("c"))
         .groupBy(col("id"))
         .agg(sum(col("c")).as("s"))
@@ -331,22 +347,15 @@ object Cluster {
     * documents (pair-free docs stay singleton clusters of themselves).
     * Output: doc_id, cluster_id = min doc_id of the component,
     * cluster_size. */
-  def dedupClusters(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val labels = connectedComponents(
-      docs.select(col("doc_id").as("id")), pairsTable(s, dir))
-    val sizes = labels.groupBy(col("label"))
-      .agg(count(lit(1)).as("cluster_size"))
-    labels.join(sizes, Seq("label"))
-      .select(col("id").as("doc_id"), col("label").as("cluster_id"),
-        col("cluster_size"))
-      .orderBy("doc_id")
-  }
+  def dedupClusters(s: SparkSession, dir: String): DataFrame =
+    dedupClustersOf(Tables.documents(s, dir), pairsTable(s, dir))
 
-  def dedupClusters(docs: DataFrame): DataFrame = {
-    val edges = ApproxDedup.ngramJaccardPairs(docs).select("a_id", "b_id")
-    val nodes = docs.select(col("doc_id").as("id"))
-    val labels = connectedComponents(nodes, edges)
+  def dedupClusters(docs: DataFrame): DataFrame =
+    dedupClustersOf(docs,
+      ApproxDedup.ngramJaccardPairs(docs).select("a_id", "b_id"))
+
+  private def dedupClustersOf(docs: DataFrame, edges: DataFrame): DataFrame = {
+    val labels = connectedComponents(docs.select(col("doc_id").as("id")), edges)
     val sizes = labels.groupBy(col("label"))
       .agg(count(lit(1)).as("cluster_size"))
     labels.join(sizes, Seq("label"))
@@ -407,7 +416,7 @@ object Cluster {
     * decontamination sweep uses to pick its cut depth.
     *
     * Scale notes: textbook frontier BFS — the undirected edge frame is
-    * checkpointed once, pre-partitioned by src so each round's
+    * [[undirectedOn]] src, checkpointed once, so each round's
     * neighbor join never re-shuffles the 2|E| side; a round shuffles
     * only the frontier (nodes at exact distance k−1, each expanded
     * exactly once) plus one min-group over discovered nodes. Rounds
@@ -417,20 +426,17 @@ object Cluster {
       pairsTable(s, dir).select("a_id", "b_id"))
 
   def contaminationHopsGraph(docs: DataFrame, edges: DataFrame): DataFrame = {
-    val und = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint()
-    var dist = docs
+    val und = undirectedOn(edges, "src")
+    val bench = docs
       .filter(col("doc_id").isNotNull && col("doc_id") % Curation.BenchModulus === 0)
       .select(col("doc_id").as("id"), lit(0L).as("hop"))
       .localCheckpoint()
-    for (k <- 1 to HopRounds) {
-      val frontier = dist.filter(col("hop") === (k - 1).toLong)
+    val dist = (1 to HopRounds).foldLeft(bench) { (reached, k) =>
+      val frontier = reached.filter(col("hop") === (k - 1).toLong)
         .select(col("id").as("src"))
       val nxt = und.join(frontier, Seq("src"))
         .select(col("dst").as("id"), lit(k.toLong).as("hop"))
-      dist = dist.unionByName(nxt)
+      reached.unionByName(nxt)
         .groupBy(col("id")).agg(min(col("hop")).as("hop"))
         .localCheckpoint()
     }
@@ -472,54 +478,41 @@ object Cluster {
     * Synchronous peel: each round recomputes degrees over the
     * SURVIVING subgraph and drops every node below K at once (the
     * parallel-friendly formulation; sequential peeling is equivalent
-    * at the fixpoint). The loop runs until a round removes no edge —
-    * an edge count is invariant across a round iff every node passed
-    * the degree filter (a dropped node takes its ≥1 edges with it),
-    * so the cheap `count()` on the just-checkpointed frame IS the
-    * convergence check. Output: surviving nodes with their in-core
-    * degree.
+    * at the fixpoint). The [[iterateToFixpoint]] loop runs until a
+    * round removes no edge — an edge count is invariant across a round
+    * iff every node passed the degree filter (a dropped node takes its
+    * ≥1 edges with it), so the cheap `count()` on the just-checkpointed
+    * frame IS the convergence check. Output: surviving nodes with their
+    * in-core degree.
     *
-    * Scale notes: the [[connectedComponents]] loop hygiene — the
-    * undirected edge frame is checkpointed each round (it only ever
-    * SHRINKS), degrees are one map-combined |E|-row aggregate, the
-    * survivor filter is two semi-join-shaped equi-joins on the edge
-    * keys; per-round work is O(|E|) regardless of corpus size, and
-    * round COUNT is the graph's peel depth (≤ 3 on the gated pair
-    * graphs; [[KCoreMaxRounds]] guards runaways by throwing). */
+    * Scale notes: the undirected edge frame is checkpointed each round
+    * (it only ever SHRINKS), degrees are one map-combined |E|-row
+    * aggregate, the survivor filter is two semi-join-shaped equi-joins
+    * on the edge keys; per-round work is O(|E|) regardless of corpus
+    * size, and round COUNT is the graph's peel depth (≤ 3 on the gated
+    * pair graphs; [[KCoreMaxRounds]] guards runaways by throwing). */
   def kcore(s: SparkSession, dir: String): DataFrame =
     kcoreGraph(pairsTable(s, dir).select("a_id", "b_id"))
 
   def kcoreGraph(edges: DataFrame, k: Int = KCoreK,
       maxRounds: Int = KCoreMaxRounds): DataFrame = {
-    var cur = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint()
-    var curEdges = cur.count()
-    var round = 0
-    var converged = curEdges == 0L
-    while (!converged) {
-      round += 1
-      if (round > maxRounds)
-        throw new IllegalStateException(
-          s"k-core peel still shrinking after $maxRounds rounds " +
-            s"($curEdges directed edges left) — refusing to truncate; " +
-            "raise maxRounds if a peel depth this deep is expected")
+    val und = undirectedOn(edges, "src")
+    val undEdges = und.count()
+    val (core, _) = iterateToFixpoint((und, undEdges), undEdges == 0L,
+        maxRounds, "k-core peel") { case (cur, _) =>
       val alive = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k.toLong)
         .select(col("src"))
-      val next = cur
+      cur
         .join(alive, Seq("src"))
         .join(alive.select(col("src").as("dst")), Seq("dst"))
         .select(col("src"), col("dst"))
         .repartition(col("src"))
-        .localCheckpoint()
+    } { case ((_, curEdges), next) =>
       val nextEdges = next.count()
-      converged = nextEdges == curEdges
-      cur = next
-      curEdges = nextEdges
+      ((next, nextEdges), nextEdges == curEdges)
     }
-    cur.groupBy(col("src")).agg(count(lit(1)).as("core_degree"))
+    core.groupBy(col("src")).agg(count(lit(1)).as("core_degree"))
       .select(col("src").as("doc_id"), col("core_degree"))
       .orderBy("doc_id")
   }
@@ -660,10 +653,8 @@ object Cluster {
   def commonNeighborsGraph(edges: DataFrame,
       cap: Int = HubWedgeDegCap): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val und = edges.select(col("a_id").as("src"), col("b_id").as("dst"))
-      .unionByName(edges.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint() // read 4-5× below (two wedge arms, degrees, probe)
+    // read 4-5× below (two wedge arms, degrees, probe)
+    val und = undirectedOn(edges, "src")
     // item-domain-sized; read 3× (hub probe + two degree joins) —
     // materialized so the und aggregate runs once
     val deg = und.groupBy(col("src")).agg(count(lit(1)).as("dg"))
@@ -692,9 +683,12 @@ object Cluster {
       .filter(col("a_id") < col("b_id"))
       .groupBy(col("a_id"), col("b_id"))
       .agg(count(lit(1)).as("n_common"))
-    // edges arrive a_id<b_id by construction, so the adjacency check is
-    // one equi-anti-join on the normalized pair key
-    val nonAdjacent = cand.join(edges.select("a_id", "b_id"),
+    // candidates are a_id<b_id; the edge side is normalized the same way
+    // (a projection, no exchange), so an edge given as (b, a) still
+    // counts as adjacent in the one equi-anti-join on the pair key
+    val nonAdjacent = cand.join(
+      edges.select(least(col("a_id"), col("b_id")).as("a_id"),
+        greatest(col("a_id"), col("b_id")).as("b_id")),
       Seq("a_id", "b_id"), "left_anti")
     val withDegrees = nonAdjacent
       .join(deg.select(col("src").as("a_id"), col("dg").as("deg_a")), Seq("a_id"))

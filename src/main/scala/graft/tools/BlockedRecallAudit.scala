@@ -6,21 +6,20 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.{ApproxDedup, Dedup, Similarity, TextAnalysis}
 
-/** At-scale sampled recall audits for the BLOCKED scale paths that are
-  * not covered by [[BandingRecallAudit]] (which proved the jpairs LSH
-  * banding at sf0.1/1/10): the sign-LSH embedding blocks behind
-  * q40/q41/q42 and the q215 containment banding. Until round 11 these
-  * were proven blocked == exact only at gated test scale plus planted
-  * fixtures; this tool turns their at-scale recall into a measured
-  * NUMBER the same way the jpairs audit did.
+/** At-scale sampled recall audits for the BLOCKED scale paths: the
+  * LSH banding of the shared τ=0.8 pair table, the sign-LSH embedding
+  * blocks behind q40/q41/q42 and the q215 containment banding. The
+  * gates prove blocked == exact only at gated scale plus planted
+  * fixtures, while the 100 TB target runs ungated; this tool turns the
+  * at-scale recall into a measured NUMBER.
   *
-  * Method (identical sampling stance to [[BandingRecallAudit]]): draw a
-  * deterministic md5Long(id) % mod == 0 sample — unbiased w.r.t. id
-  * layout — compute the EXACT truth within the sample (cheap: the
-  * quadratic exact twins cost sample², not corpus²), and measure how
-  * much of it the blocking at FULL-CORPUS granularity retains. A sample
-  * pair is a uniform draw of true pairs with both endpoints sampled, so
-  * recovered/exact estimates corpus-wide blocking recall.
+  * Method: draw a deterministic md5Long(id) % mod == 0 sample —
+  * unbiased w.r.t. id layout, and replayable in DuckDB SQL — compute
+  * the EXACT truth within the sample (cheap: the quadratic exact twins
+  * cost sample², not corpus²), and measure how much of it the blocking
+  * at FULL-CORPUS granularity retains. A sample pair is a uniform draw
+  * of true pairs with both endpoints sampled, so recovered/exact
+  * estimates corpus-wide blocking recall.
   *
   *  - q40 (τ=0.35 blocked near-dup pairs): exact = all-pairs cosine ≥ τ
   *    within the vector sample; recovered = those pairs present in the
@@ -51,14 +50,18 @@ import graft.operators.{ApproxDedup, Dedup, Similarity, TextAnalysis}
   * Usage:
   *   sbt "runMain graft.tools.BlockedRecallAudit <sfDir> [mod] [families]"
   * families = comma list of q40,q41,q42,q215 (default: all four).
-  * Opt-in families outside the default set: q40plant plants cos≈0.97
-  * near-dup copies and measures their recovery at the corpus-scaled
-  * schedule — the production-regime number that motivated the LshTables
-  * OR; q71 measures the incremental TEXT dedup's natural batch-vs-
-  * corpus τ-match banding survival (plus matched-DOC retention, the
-  * q42-style user-visible number); q71plant plants a J≈0.85 perturbed
-  * batch copy of every corpus doc and runs it end-to-end through
-  * dedupIncrementalTextPre.
+  * Opt-in families outside the default set: jpairs measures the shared
+  * pair table's banding (jpairs_v3, q23 and its nine downstream graph
+  * consumers; miss probability ~(1−J⁴)³² per true pair): exact =
+  * within-sample τ-pairs by the exact-complete prefix-filter path,
+  * recovered = those found by the banded builder over the full corpus;
+  * q40plant plants cos≈0.97 near-dup copies and measures their recovery
+  * at the corpus-scaled schedule — the production-regime number that
+  * motivated the LshTables OR; q71 measures the incremental TEXT dedup's
+  * natural batch-vs-corpus τ-match banding survival (plus matched-DOC
+  * retention, the q42-style user-visible number); q71plant plants a
+  * J≈0.85 perturbed batch copy of every corpus doc and runs it
+  * end-to-end through dedupIncrementalTextPre.
   * Prints one JSON line per family:
   *   {"metric":"blocked_recall","family":…,"sample_n":…,"exact":…,
   *    "recovered":…,"recall_r":…}  (q42 adds matched-vector retention).
@@ -87,6 +90,8 @@ object BlockedRecallAudit {
       val emb = Tables.embeddings(spark, dir)
       lazy val fullN = Dedup.normalized(emb).count()
       lazy val sampleEmb = sampleIds(emb, "vec_id", mod).localCheckpoint()
+      lazy val sampleDocs = sampleIds(Tables.documents(spark, dir), "doc_id", mod)
+        .localCheckpoint()
 
       def emit(family: String, n: Long, exact: Long, rec: Long,
           extra: String = ""): Unit =
@@ -241,11 +246,21 @@ object BlockedRecallAudit {
             s""","cand_base":$candBase,"cand_probe":$candProbe""")
       }
 
+      if (families("jpairs")) {
+        val nS = sampleDocs.count()
+        val exact = ApproxDedup.ngramJaccardPairs(sampleDocs)
+          .select("a_id", "b_id").localCheckpoint()
+        val nExact = exact.count()
+        val rec = exact.join(
+          ApproxDedup.minhashLshPairs(Tables.documents(spark, dir))
+            .select("a_id", "b_id"),
+          Seq("a_id", "b_id")).count()
+        emit("jpairs", nS, nExact, rec)
+      }
+
       if (families("q215")) {
-        val docs = sampleIds(Tables.documents(spark, dir), "doc_id", mod)
-          .localCheckpoint()
-        val nS = docs.count()
-        val exact = ApproxDedup.containmentPairs(docs)
+        val nS = sampleDocs.count()
+        val exact = ApproxDedup.containmentPairs(sampleDocs)
           .select("a_id", "b_id").localCheckpoint()
         val nExact = exact.count()
         val rec = exact.join(

@@ -21,6 +21,11 @@ class LinkPredictionSpec extends SparkTestBase {
     val closed = Cluster.commonNeighborsGraph(
       edges((1L, 2L), (2L, 3L), (1L, 3L))).collect()
     assert(closed.isEmpty, "adjacent pairs must be anti-joined away")
+    // the same triangle with one edge given as (b, a): adjacency holds
+    // in either orientation
+    val reversed = Cluster.commonNeighborsGraph(
+      edges((1L, 2L), (2L, 3L), (3L, 1L))).collect()
+    assert(reversed.isEmpty, s"reversed edge not anti-joined: ${rows(reversed)}")
   }
 
   test("counts accumulate over multiple shared neighbors") {
