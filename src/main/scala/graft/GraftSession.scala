@@ -40,6 +40,10 @@ object GraftSession {
       // streaming driver still compiles a few new classes per trigger.
       // Static: read once, when the first class is generated.
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
+      // file: with in-process permissions and link checks, not forked
+      // chmod/readlink, for the FileSystem and FileContext APIs (LocalFs)
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs.ChecksummedFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFs.ChecksummedFs].getName)
 
   def get(): SparkSession = {
     val s = builder().getOrCreate()

@@ -173,9 +173,8 @@ object Sampling {
        |FROM t WHERE mix_bucket < thresh_ppm ORDER BY doc_id""".stripMargin
   }
 
-  /** Epochs and range-bucket count for [[epochShuffle]]. */
+  /** Epochs for [[epochShuffle]]. */
   val ShuffleEpochs = 2
-  val ShuffleBuckets = 64
 
   /** q143: deterministic global epoch shuffle — every training run
     * needs each epoch's documents in a fresh pseudo-random order, with

@@ -6,9 +6,8 @@ import org.apache.spark.sql.DataFrame
   * curated_to_postgres.py:50-75, and the Delta/MinIO medallion writes).
   *
   * Scale notes: partitioned parquet with sortWithinPartitions gives
-  * partition-pruned, run-length-friendly files; JDBC export parallelism
-  * is numPartitions connections writing batchsize-row inserts — the knobs
-  * that matter at scale, assembled here so callers can't forget them. */
+  * partition-pruned, run-length-friendly files — the knobs that matter
+  * at scale, assembled here so callers can't forget them. */
 object Sinks {
 
   /** Write a frame as hive-partitioned parquet, sorted within partitions
@@ -40,22 +39,4 @@ object Sinks {
     df.write.mode("overwrite")
       .bucketBy(buckets, key).sortBy(key)
       .format("parquet").saveAsTable(table)
-
-  /** JDBC export writer with explicit parallelism + batch size (the
-    * curated→postgres shape). Connection is environment-provided; this
-    * only assembles the write, so it is unit-testable up to `.save()`.
-    * Shrinking to `numPartitions` uses coalesce (no shuffle — the usual
-    * export case: bounding connection count on a wide frame); only a
-    * genuine widening repartitions. */
-  def jdbcWriter(df: DataFrame, url: String, table: String,
-      numPartitions: Int = 8, batchSize: Int = 10000): org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] = {
-    val sized =
-      if (df.rdd.getNumPartitions >= numPartitions) df.coalesce(numPartitions)
-      else df.repartition(numPartitions)
-    sized.write.format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .option("batchsize", batchSize.toString)
-      .option("isolationLevel", "NONE")
-  }
 }
