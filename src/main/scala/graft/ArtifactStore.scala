@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Shared store for derived artifacts that are built once per source dir
   * and served many times (the q46/q87/q93 pair table, the q72 persisted
@@ -20,8 +22,58 @@ import org.apache.spark.sql.SparkSession
   * A concurrent builder racing to the same artifact loses the rename
   * and drops its staging copy; readers either see the complete artifact
   * or none — never a partial one, because the final path only ever
-  * appears via the rename of a fully-built staging dir. */
+  * appears via the rename of a fully-built staging dir.
+  *
+  * Table contract: every parquet table inside an artifact is written by
+  * [[writeTable]], which records the table's schema in `<table>/_schema`
+  * (JSON, nullable as parquet stores it, data columns first and
+  * partition columns last), and read by [[readTable]] with that schema.
+  * A read therefore starts no footer-inference job, and a zero-row
+  * partitioned table (no part files, only `_SUCCESS`) reads back as a
+  * typed empty frame. There is no inference fallback: a table without
+  * `_schema` fails to read. Spark's file listing skips `_`-prefixed
+  * names, so `_schema` is never read as data. */
 object ArtifactStore {
+
+  /** Storage format of graft-built artifacts, folded into every
+    * [[graft.Tables.dirFingerprint]]: bump when the stored layout
+    * changes, so an artifact an earlier build left in the warehouse is
+    * never served and [[ensureCurrent]]'s retention sweeps it as a
+    * superseded fingerprint. s1: tables carry `_schema`. */
+  private[graft] val Format = "s1"
+
+  private val SchemaFile = "_schema"
+
+  /** Write `df` as the parquet table at `path`, partitioned by
+    * `partitionCols`, and record its schema in `<path>/_schema`. */
+  def writeTable(df: DataFrame, path: String, partitionCols: String*): Unit = {
+    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
+    val data = df.schema.filterNot(f => partitionCols.contains(f.name))
+    val stored = ColumnBridge.asNullable(StructType(data ++ partitionCols.map(df.schema(_))))
+    val p = new Path(path, SchemaFile)
+    writeUtf8(p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration), p, stored.json)
+  }
+
+  /** The table [[writeTable]] wrote at `path`, read with its recorded
+    * schema. */
+  def readTable(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path, SchemaFile)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    spark.read.schema(parseSchema(readUtf8(fs, p))).parquet(path)
+  }
+
+  private[graft] def parseSchema(json: String): StructType =
+    DataType.fromJson(json).asInstanceOf[StructType]
+
+  private[graft] def writeUtf8(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  private[graft] def readUtf8(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
 
   def warehouseRoot(spark: SparkSession): Path = {
     val dflt = java.nio.file.Paths

@@ -116,7 +116,9 @@ object Tables {
     * artifact. Callers pass everything that determines the bytes they
     * write (normalized input schema via `df.schema.catalogString`,
     * format options): any change to writer semantics then mints a new
-    * key and can never serve a stale artifact. */
+    * key and can never serve a stale artifact. [[ArtifactStore.Format]]
+    * rides every key the same way, for a change to how artifacts store
+    * their tables. */
   def dirFingerprint(spark: SparkSession, dir: String, semantics: String): String = {
     val conf = spark.sparkContext.hadoopConfiguration
     val meta = names.map { n =>
@@ -127,7 +129,8 @@ object Tables {
       }.getOrElse(s"$n:0:0")
     }
     val md = java.security.MessageDigest.getInstance("MD5")
-      .digest((dir + meta.mkString(",") + "|" + semantics).getBytes("UTF-8"))
+      .digest((dir + meta.mkString(",") + "|" + semantics + "|" + ArtifactStore.Format)
+        .getBytes("UTF-8"))
     md.take(8).map(b => f"$b%02x").mkString
   }
 }

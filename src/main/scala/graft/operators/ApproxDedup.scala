@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ArtifactStore.{readTable, writeTable}
 import graft.Tables
 import graft.functions.VectorOps.arraySum
 
@@ -347,10 +348,9 @@ object ApproxDedup {
       Tables.dirFingerprint(s, dir,
         s"containment;bands=$CBands;rows=$CRows;near=$CNearHits;" +
           s"far=$CFarHits;dist=$CMaxBucketDist;cap=$CBucketCap;tau=$TauC")) { staging =>
-      containmentBlockedPairs(Tables.documents(s, dir))
-        .write.parquet(staging)
+      writeTable(containmentBlockedPairs(Tables.documents(s, dir)), staging)
     }
-    s.read.parquet(path).orderBy("a_id", "b_id")
+    readTable(s, path).orderBy("a_id", "b_id")
   }
 
   def containmentBlocked(docs: DataFrame): DataFrame =
@@ -840,13 +840,13 @@ object ApproxDedup {
       Tables.dirFingerprint(s, dir)) { staging =>
       val shc = shingleSets(docs.filter(col("doc_id") < IncrementalCorpusMax))
         .filter(size(col("shingles")) > 0)
-      bandRows(shc).select(col("doc_id").as("c_id"), col("band"), col("band_key"))
-        .write.mode("overwrite").parquet(staging + "/bands")
-      shc.select(col("doc_id").as("c_id"), col("shingles").as("sc"))
-        .write.mode("overwrite").parquet(staging + "/shingles")
+      writeTable(bandRows(shc).select(col("doc_id").as("c_id"), col("band"), col("band_key")),
+        staging + "/bands")
+      writeTable(shc.select(col("doc_id").as("c_id"), col("shingles").as("sc")),
+        staging + "/shingles")
     }
-    dedupIncrementalTextPre(s.read.parquet(path + "/bands"),
-      s.read.parquet(path + "/shingles"), docs, IncrementalCorpusMax)
+    dedupIncrementalTextPre(readTable(s, path + "/bands"),
+      readTable(s, path + "/shingles"), docs, IncrementalCorpusMax)
   }
 
   def dedupIncrementalText(docs: DataFrame, corpusMax: Long): DataFrame = {

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ArtifactStore.{readTable, writeTable}
 import graft.Tables
 
 /** q110: distributed byte-level BPE merge training (Sennrich et al.
@@ -103,31 +104,16 @@ object BpeTrain {
   /** Bump when the stored schema or train semantics change. */
   private val LayoutVersion = "v1"
 
-  private def structField(n: String, t: org.apache.spark.sql.types.DataType) =
-    org.apache.spark.sql.types.StructField(n, t)
-  private val mergesSchema = org.apache.spark.sql.types.StructType(Seq(
-    structField("merge_rank", org.apache.spark.sql.types.LongType),
-    structField("lhs", org.apache.spark.sql.types.StringType),
-    structField("rhs", org.apache.spark.sql.types.StringType),
-    structField("merged", org.apache.spark.sql.types.StringType),
-    structField("pair_count", org.apache.spark.sql.types.LongType)))
-  private val vocabSchema = org.apache.spark.sql.types.StructType(Seq(
-    structField("w", org.apache.spark.sql.types.StringType),
-    structField("seq", org.apache.spark.sql.types.StringType),
-    structField("cnt", org.apache.spark.sql.types.LongType)))
-
   /** Train into `staging`: the merge table (≤ [[Merges]] rows) and the
     * final vocab state (vocab-sized). An empty/dry corpus writes empty
-    * tables — the read paths degenerate typed-empty (explicit schemas,
-    * never inference). */
+    * tables — the read paths degenerate typed-empty. */
   private[graft] def buildBpe(docs: DataFrame, staging: String): Unit = {
     val spark = docs.sparkSession
     val (found, hist, vocab) = trainCore(docs)
-    spark.createDataFrame(found)
+    writeTable(spark.createDataFrame(found)
       .toDF("merge_rank", "lhs", "rhs", "merged", "pair_count")
-      .coalesce(1).write.parquet(s"$staging/merges.parquet")
-    vocab.select(col("w"), col("seq"), col("cnt"))
-      .write.parquet(s"$staging/vocab.parquet")
+      .coalesce(1), s"$staging/merges.parquet")
+    writeTable(vocab.select(col("w"), col("seq"), col("cnt")), s"$staging/vocab.parquet")
     hist.unpersist()
   }
 
@@ -144,7 +130,7 @@ object BpeTrain {
   /** q110 gated entry: serve the persisted merge table. */
   def bpeMerges(s: SparkSession, dir: String): DataFrame = {
     val path = ensureBpe(s, dir)
-    s.read.schema(mergesSchema).parquet(s"$path/merges.parquet")
+    readTable(s, s"$path/merges.parquet")
       .orderBy("merge_rank")
   }
 
@@ -214,7 +200,7 @@ object BpeTrain {
     * breaks it). */
   def bpeEncode(s: SparkSession, dir: String): DataFrame =
     encodeWith(Tables.documents(s, dir),
-      s.read.schema(vocabSchema).parquet(s"${ensureBpe(s, dir)}/vocab.parquet"))
+      readTable(s, s"${ensureBpe(s, dir)}/vocab.parquet"))
 
   def bpeEncode(s: SparkSession, docs: DataFrame): DataFrame = {
     val (_, _, vocab) = trainCore(docs)
@@ -256,7 +242,7 @@ object BpeTrain {
   def fertility(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     fertilityWith(docs,
-      s.read.schema(vocabSchema).parquet(s"${ensureBpe(s, dir)}/vocab.parquet"))
+      readTable(s, s"${ensureBpe(s, dir)}/vocab.parquet"))
   }
 
   private[graft] def fertilityWith(docs: DataFrame, vocab: DataFrame): DataFrame = {

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ArtifactStore.{readTable, writeTable}
 import graft.Tables
 
 /** Connected-components clustering over near-duplicate pair edges — the
@@ -190,10 +191,9 @@ object Cluster {
   private[operators] def pairsTable(s: SparkSession, dir: String): DataFrame = {
     val path = graft.ArtifactStore.ensureCurrent(s,
       "jpairs_v3", Tables.dirFingerprint(s, dir)) { staging =>
-      ApproxDedup.minhashLshPairs(Tables.documents(s, dir))
-        .write.mode("overwrite").parquet(staging)
+      writeTable(ApproxDedup.minhashLshPairs(Tables.documents(s, dir)), staging)
     }
-    s.read.parquet(path)
+    readTable(s, path)
   }
 
   /** Rounds and seed rule for [[labelPropagation]]. */
@@ -627,21 +627,20 @@ object Cluster {
       s"basket_edges_v1b${Itemsets.BaseSup}d${Itemsets.SupDensity}" +
         s"m${Itemsets.MaxSup}",
       Tables.dirFingerprint(s, dir)) { staging =>
-      val li = s.read.parquet(Itemsets.basketItemsPath(s, dir))
+      val li = readTable(s, Itemsets.basketItemsPath(s, dir))
         .filter(col("basket").isNotNull && col("item").isNotNull)
       val st = li.agg(count(lit(1)).as("nr"),
         countDistinct(col("item")).as("ni")).first()
       val minSup = Itemsets.scaledMinSup(st.getLong(0), st.getLong(1))
-      li.select(col("basket"), col("item").as("a_id"))
+      writeTable(li.select(col("basket"), col("item").as("a_id"))
         .join(li.select(col("basket"), col("item").as("b_id")), Seq("basket"))
         .where(col("a_id") < col("b_id"))
         .groupBy(col("a_id"), col("b_id"))
         .agg(count(lit(1)).as("support"))
         .where(col("support") >= minSup.toLong)
-        .select(col("a_id"), col("b_id"))
-        .write.mode("overwrite").parquet(staging)
+        .select(col("a_id"), col("b_id")), staging)
     }
-    commonNeighborsGraph(s.read.parquet(path))
+    commonNeighborsGraph(readTable(s, path))
   }
 
   /** Wedge-enumeration degree cap for hub middle vertices — 256 keeps

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ArtifactStore.{readTable, writeTable}
 import graft.Tables
 
 /** Small-file compaction (q114) — the lakehouse maintenance operation
@@ -41,20 +42,19 @@ object Compact {
       Tables.dirFingerprint(s, dir,
         s"frag=$FragFiles;compact=$CompactFiles;${src.schema.catalogString}")) { staging =>
       // the fragmented state a micro-batching ingest leaves behind
-      src.repartition(FragFiles).write.parquet(s"$staging/frag")
+      writeTable(src.repartition(FragFiles), s"$staging/frag")
       // the rewrite: read the small files back (compaction must work
       // from the files, not the logical source), cluster by event time
-      s.read.parquet(s"$staging/frag")
+      writeTable(readTable(s, s"$staging/frag")
         .repartitionByRange(CompactFiles, col("ts"), col("event_id"))
-        .sortWithinPartitions("ts", "event_id")
-        .write.parquet(s"$staging/compact")
+        .sortWithinPartitions("ts", "event_id"), s"$staging/compact")
     }
   }
 
   /** q114: the compacted read, gated as a value round-trip. */
   def compactRead(s: SparkSession, dir: String): DataFrame = {
     val base = compactionArtifact(s, dir)
-    s.read.parquet(s"$base/compact")
+    readTable(s, s"$base/compact")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .orderBy("event_id")
   }

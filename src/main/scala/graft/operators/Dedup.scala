@@ -332,10 +332,9 @@ object Dedup {
     val corpusPath = graft.ArtifactStore.ensureCurrent(s, "inc_corpus_emb_v3",
       Tables.dirFingerprint(s, dir,
         s"incdedup;bits=$bits;tables=${Similarity.LshTables}")) { staging =>
-      corpusSideEmb(corpusRaw, bits)
-        .write.mode("overwrite").parquet(staging)
+      graft.ArtifactStore.writeTable(corpusSideEmb(corpusRaw, bits), staging)
     }
-    dedupIncrementalPre(s.read.parquet(corpusPath),
+    dedupIncrementalPre(graft.ArtifactStore.readTable(s, corpusPath),
       emb.filter(col("vec_id") % 5 === 0), IncrementalTau, bits)
   }
 

@@ -155,21 +155,6 @@ object Hll {
       .groupBy(col("wh"), col("j")).agg(max(col("mj")).as("mj"))
   }
 
-  /** The STREAMING form of q120's window merge: each event's register
-    * contribution replicates to its ≤3 window ends and ONE grouped MAX
-    * maintains the state — a single update/complete-mode aggregate whose
-    * state is ≤ m rows per live window forever, exactly like q74's
-    * [[registerTable]]. MAX is associative and commutative, so any
-    * micro-batch split equals the batch two-level merge
-    * ([[mergedWindowRegisters]]) on the same events — StreamingSpec
-    * replays 1/2/3-batch splits to prove it. (Window ends here are all
-    * CANDIDATE ends; the batch reporting path restricts to observed
-    * hours, which a consumer of the stream state does at read time.) */
-  def windowRegisterTable(events: DataFrame): DataFrame =
-    hourRanks(hourKeyed(events))
-      .select(windowEnds(col("hour")).as("wh"), col("j"), col("rank"))
-      .groupBy(col("wh"), col("j")).agg(max(col("rank")).as("mj"))
-
   def hllWindowDistinct(events: DataFrame): DataFrame = {
     val keyed = hourKeyed(events)
     val merged = mergedWindowRegisters(events)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ArtifactStore.{readTable, writeTable}
 import graft.Tables
 
 /** Frequent-itemset / association-rule mining (Agrawal & Srikant 1994,
@@ -88,10 +89,9 @@ object Itemsets {
   def basketItemsPath(s: SparkSession, dir: String): String =
     graft.ArtifactStore.ensureCurrent(s, "basket_items_v1",
       Tables.dirFingerprint(s, dir)) { staging =>
-      Tables.lineitem(s, dir)
+      writeTable(Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("basket"), col("l_partkey").as("item"))
-        .distinct()
-        .write.mode("overwrite").parquet(staging)
+        .distinct(), staging)
     }
 
   /** Brand-level distinct (basket, item = p_brand) frame derived from
@@ -104,14 +104,13 @@ object Itemsets {
   def brandItemsPath(s: SparkSession, dir: String): String =
     graft.ArtifactStore.ensureCurrent(s, "brand_items_v1",
       Tables.dirFingerprint(s, dir)) { staging =>
-      s.read.parquet(basketItemsPath(s, dir))
+      writeTable(readTable(s, basketItemsPath(s, dir))
         .join(broadcast(Tables.part(s, dir)
           .select(col("p_partkey"), col("p_brand"))),
           col("item") === col("p_partkey"))
         .where(col("p_brand").isNotNull)
         .select(col("basket"), col("p_brand").as("item"))
-        .distinct()
-        .write.mode("overwrite").parquet(staging)
+        .distinct(), staging)
     }
 
   /** q189: all frequent brand pairs with support, directional
@@ -119,7 +118,7 @@ object Itemsets {
     * [[brandItemsPath]] artifact — steady-state daily runs skip the
     * fact scan, brand remap, and both distinct shuffles entirely. */
   def brandAffinity(s: SparkSession, dir: String): DataFrame =
-    affinityChain(s.read.parquet(brandItemsPath(s, dir)))
+    affinityChain(readTable(s, brandItemsPath(s, dir)))
 
   def brandAffinity(lineitem: DataFrame, part: DataFrame): DataFrame =
     affinityChain(

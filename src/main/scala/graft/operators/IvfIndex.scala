@@ -2,38 +2,31 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorOps._
+import graft.ArtifactStore.{readTable, writeTable}
 
 /** Persisted IVF index: the serving-side layout for ANN at scale.
   *
-  * [[build]] trains the coarse quantizer and writes
+  * [[buildExact]] trains the coarse quantizer and writes
   *   path/centroids.parquet          (cell, center)       — tiny, broadcast
   *   path/corpus/cell=<c>/...        (vec_id, e, nrm)     — hive-partitioned
-  * [[search]] ranks cells per query against the broadcast centroids and
+  * [[searchExact]] ranks cells per query against the centroids and
   * joins only the probed cells; because `cell` is the partition column,
   * Spark's dynamic partition pruning skips the unprobed directories — at
   * 100 TB each query batch physically reads nprobe/nlist of the corpus. */
 object IvfIndex {
 
-  def build(embeddings: DataFrame, path: String, nlist: Int = 16): Unit = {
-    val (assigned, centers) = Similarity.kmeansCells(embeddings, nlist)
-    centers.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids.parquet")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$path/corpus")
-  }
-
-  /** [[build]] with the deterministic [[KMeansOp]] quantizer — the
-    * persisted twin of q65's in-memory pipeline. Same layout; the train
-    * loop, cell assignment, and stored doubles are all engine-exact, so
-    * the READ path ([[searchExact]]) is value-oracle-checkable. */
+  /** Build the index with the deterministic [[KMeansOp]] quantizer — the
+    * persisted twin of q65's in-memory pipeline. The train loop, cell
+    * assignment, and stored doubles are all engine-exact, so the READ
+    * path ([[searchExact]]) is value-oracle-checkable. */
   def buildExact(embeddings: DataFrame, path: String): Unit = {
     val spark = embeddings.sparkSession
     val (qv, cents) = KMeansOp.trainCentsScaled(embeddings)
     val assigned = KMeansOp.assignAuto(qv, cents).select(col("vec_id"), col("cell"))
-    spark.createDataFrame(cents.map { case (id, c) => (id, c) })
-      .toDF("cell", "center")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids.parquet")
-    Dedup.normalized(embeddings).join(assigned, Seq("vec_id"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/corpus")
+    writeTable(spark.createDataFrame(cents.map { case (id, c) => (id, c) })
+      .toDF("cell", "center").coalesce(1), s"$path/centroids.parquet")
+    writeTable(Dedup.normalized(embeddings).join(assigned, Seq("vec_id")),
+      s"$path/corpus", "cell")
   }
 
   /** Search the exact persisted index: probe ranking replays q65's
@@ -45,22 +38,12 @@ object IvfIndex {
     * which is what lets q72 share q65's generated oracle. */
   def searchExact(spark: SparkSession, path: String, queries: DataFrame,
       nprobe: Int = 3, k: Int = 10): DataFrame = {
-    val cents = spark.read.parquet(s"$path/centroids.parquet")
+    val cents = readTable(spark, s"$path/centroids.parquet")
       .orderBy("cell").collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
-    // an index built from an EMPTY corpus has no corpus part files at
-    // all (a partitioned write of zero rows emits only _SUCCESS), so
-    // the parquet read can't infer a schema — and there is nothing to
-    // read: serve the typed empty candidate set instead
-    val corpus =
-      if (cents.isEmpty)
-        Dedup.normalized(queries)
-          .select(col("vec_id").as("__cand_id"), col("e").as("ec"),
-            col("nrm").as("nc"), lit(null).cast("long").as("cell"))
-          .limit(0)
-      else spark.read.parquet(s"$path/corpus")
-        .select(col("vec_id").as("__cand_id"), col("e").as("ec"),
-          col("nrm").as("nc"), col("cell"))
+    val corpus = readTable(spark, s"$path/corpus")
+      .select(col("vec_id").as("__cand_id"), col("e").as("ec"),
+        col("nrm").as("nc"), col("cell"))
     // probe + score through the ONE shared pipeline (Similarity
     // .ivfProbeScore) so this read path can never drift from q65's
     // in-memory path, whose generated oracle q72 shares
@@ -100,11 +83,10 @@ object IvfIndex {
     * batch-sized narrow assignment + one partitioned append — the
     * corpus in place is never rewritten. */
   def upsertBatch(s: SparkSession, path: String, batch: DataFrame): Unit = {
-    val cents = s.read.parquet(s"$path/centroids.parquet")
+    val cents = readTable(s, s"$path/centroids.parquet")
       .orderBy("cell").collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
-    // an empty (untrainable) index has no cells — nothing to assign to;
-    // the read path already degenerates typed-empty
+    // an empty (untrainable) index has no cells — nothing to assign to
     if (cents.nonEmpty) {
       val qv = KMeansOp.quantized(batch)
       val assigned = KMeansOp.assignAuto(qv, cents).select(col("vec_id"), col("cell"))
@@ -163,22 +145,5 @@ object IvfIndex {
        |  FROM p)
        |SELECT query_id, neighbor_id, rank, ROUND(sim, 9) AS sim_r
        |FROM r WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
-  }
-
-  def search(spark: SparkSession, path: String, queries: DataFrame,
-      nprobe: Int = 4, k: Int = 10): DataFrame = {
-    val centers = spark.read.parquet(s"$path/centroids.parquet")
-    val corpus = spark.read.parquet(s"$path/corpus")
-      .select(col("vec_id").as("__cand_id"), col("e").as("ec"),
-        col("nrm").as("nc"), col("cell"))
-    val q = Dedup.normalized(queries)
-      .select(col("vec_id").as("query_id"), col("e").as("eq"), col("nrm").as("nq"))
-    val probed = Similarity.probeCells(q, centers, nprobe)
-    val scored = broadcast(probed).join(corpus, Seq("cell"))
-      .filter(col("query_id") =!= col("__cand_id"))
-      .select(col("query_id"), col("__cand_id"),
-        cosinePre(col("eq"), col("ec"), col("nq"), col("nc")).as("sim"))
-    Similarity.explodeTopKPerGroup(scored, "query_id", "neighbor_id", k)
-      .orderBy("query_id", "rank")
   }
 }

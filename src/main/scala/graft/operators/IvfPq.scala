@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ArtifactStore.{readTable, writeTable}
 import graft.Tables
 
 /** IVF-PQ: the coarse-quantizer × product-quantizer composition that is
@@ -78,17 +79,6 @@ object IvfPq {
     * v2: residual-encoded codes + md5-scrambled coarse seed. */
   private val LayoutVersion = "v3"
 
-  import org.apache.spark.sql.types._
-
-  private val cellsSchema = StructType(Seq(
-    StructField("cell", LongType),
-    StructField("c", ArrayType(DoubleType))))
-
-  private val codesCellSchema = StructType(
-    StructField("vec_id", LongType) +:
-    (0 until PqOp.M).map(m => StructField(s"code$m", LongType)) :+
-    StructField("cell", LongType))
-
   // ------------------------------------------------------------------
   // Coarse quantizer: Lloyd at full Dim over the unit-quantized frame.
 
@@ -153,10 +143,9 @@ object IvfPq {
   // Build.
 
   /** Build the IVF-PQ index under `staging`. An untrainable corpus
-    * (empty / no seeds) publishes empty cells/codebooks and a flat
-    * empty codes file (a partitioned write of zero rows emits only
-    * _SUCCESS — the IvfIndex precedent), so the read path degenerates
-    * typed-empty instead of rebuilding forever. */
+    * (empty / no seeds) publishes empty cells/codebooks and no codes
+    * (the read path sees the empty tables and returns before it reads
+    * codes), instead of rebuilding forever. */
   private[graft] def buildIvfPq(embeddings: DataFrame, staging: String): Unit = {
     val spark = embeddings.sparkSession
     val qv = PqOp.unitQuantized(embeddings).localCheckpoint()
@@ -165,23 +154,14 @@ object IvfPq {
       if (cents.isEmpty) qv // empty corpus: nothing to residualize
       else residualized(qv, cents)
     val books = PqOp.trainSubs(rqv)
-    spark.createDataFrame(cents.map { case (id, c) => (id, c) })
-      .toDF("cell", "c")
-      .coalesce(1).write.parquet(s"$staging/cells.parquet")
-    val bookRows = books.zipWithIndex.flatMap { case (b, m) =>
-      b.map { case (cell, c) => (m, cell, c) } }
-    spark.createDataFrame(bookRows).toDF("m", "cell", "c")
-      .coalesce(1).write.parquet(s"$staging/codebooks.parquet")
-    if (cents.isEmpty || books.exists(_.isEmpty))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], codesCellSchema)
-        .write.parquet(s"$staging/codes")
-    else
-      PqOp.encode(rqv, books)
+    writeTable(spark.createDataFrame(cents.map { case (id, c) => (id, c) })
+      .toDF("cell", "c").coalesce(1), s"$staging/cells.parquet")
+    PqOp.writeBooks(spark, books, staging)
+    if (cents.nonEmpty && !books.exists(_.isEmpty))
+      writeTable(PqOp.encode(rqv, books)
         .select(col("vec_id") +:
           (0 until PqOp.M).map(m => col(s"code$m")) :+
-          col("gcell").as("cell"): _*)
-        .write.partitionBy("cell").parquet(s"$staging/codes")
+          col("gcell").as("cell"): _*), s"$staging/codes", "cell")
   }
 
   // ------------------------------------------------------------------
@@ -268,7 +248,7 @@ object IvfPq {
         s"r=${PqOp.Rounds};scale=${KMeansOp.ScaleQ};${em.schema.catalogString}")) {
       staging => buildIvfPq(em, staging)
     }
-    val cents = s.read.schema(cellsSchema).parquet(s"$path/cells.parquet")
+    val cents = readTable(s, s"$path/cells.parquet")
       .orderBy("cell").collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
     val books = PqOp.loadBooks(s, path)
@@ -278,7 +258,7 @@ object IvfPq {
         .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
     if (cents.isEmpty || books.exists(_.isEmpty) || queries.isEmpty) None
     else {
-      val codes = s.read.schema(codesCellSchema).parquet(s"$path/codes")
+      val codes = readTable(s, s"$path/codes")
       Some(scoreProbedResidual(codes, queries, books,
         probeCells(queries, cents, nprobe), cents))
     }

@@ -15,8 +15,7 @@ import graft.Tables
   * per-shard scan is inherently order-dependent (each doc's pack depends
   * on every doc before it), so it runs as one `flatMapGroups` pass per
   * shard sorted by doc_id — the same legitimate per-group sequential
-  * state pattern as sessionization, with memory bounded by shard size
-  * (pick `shards` so a shard fits an executor core).
+  * state pattern as sessionization, with memory bounded by shard size.
   */
 object Packing {
 
@@ -27,23 +26,6 @@ object Packing {
   case class DocTok(source: String, doc_id: Long, n_tokens: Long)
   case class Packed(source: String, doc_id: Long, n_tokens: Long,
     pack_id: Long, pack_pos: Long)
-  case class DocTokS(source: String, shard: Long, doc_id: Long, n_tokens: Long)
-  case class PackedS(source: String, shard: Long, doc_id: Long, n_tokens: Long,
-    pack_id: Long, pack_pos: Long)
-
-  /** Greedy scan shared by both packers: docs sorted by id, accumulate
-    * until the budget would overflow, then open a new pack. */
-  private def greedy[T](sorted: Array[(Long, Long)], budget: Long,
-      emit: (Long, Long, Long, Long) => T): Iterator[T] = {
-    var acc = 0L
-    var pack = 0L
-    var pos = 0L
-    sorted.iterator.map { case (docId, n) =>
-      if (pack == 0L || acc + n > budget) { pack += 1; acc = n; pos = 1 }
-      else { acc += n; pos += 1 }
-      emit(docId, n, pack, pos)
-    }
-  }
 
   /** q48: greedy pack per source — docs in doc_id order accumulate into
     * the current pack until the next one would exceed the budget, which
@@ -66,38 +48,17 @@ object Packing {
       .as[DocTok]
     toks.groupByKey(_.source)
       .flatMapGroups { (src, it) =>
-        val sorted = it.toArray.sortBy(_.doc_id).map(d => (d.doc_id, d.n_tokens))
-        greedy(sorted, budget, Packed(src, _, _, _, _))
+        var acc = 0L
+        var pack = 0L
+        var pos = 0L
+        it.toArray.sortBy(_.doc_id).iterator.map { d =>
+          if (pack == 0L || acc + d.n_tokens > budget) { pack += 1; acc = d.n_tokens; pos = 1 }
+          else { acc += d.n_tokens; pos += 1 }
+          Packed(src, d.doc_id, d.n_tokens, pack, pos)
+        }
       }
       .toDF()
       .orderBy("source", "doc_id")
-  }
-
-  /** Sharded packing — the 100 TB path. The shard key is
-    * (source, md5(doc_id) mod `shards`), so the unit of sequential scan
-    * (and of executor memory: one shard's (id, count) pairs) stays
-    * bounded no matter how large a single source grows; shards pack
-    * independently and in parallel. Deterministic: the shard assignment
-    * is a hash of the data, not of the partitioning. */
-  def packSequencesSharded(docs: DataFrame, budget: Long = Budget,
-      shards: Int = 64): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val toks = docs.select(
-        coalesce(col("source"), lit("")).as("source"),
-        (TextAnalysis.md5Long(concat(col("doc_id").cast("string"), lit(":shard")))
-          % shards).as("shard"),
-        col("doc_id"),
-        coalesce(size(TextAnalysis.words(col("text"))).cast("long"), lit(0L))
-          .as("n_tokens"))
-      .as[DocTokS]
-    toks.groupByKey(d => (d.source, d.shard))
-      .flatMapGroups { (key: (String, Long), it: Iterator[DocTokS]) =>
-        val sorted = it.toArray.sortBy(_.doc_id).map(d => (d.doc_id, d.n_tokens))
-        greedy(sorted, budget, PackedS(key._1, key._2, _, _, _, _))
-      }
-      .toDF()
-      .orderBy("source", "shard", "doc_id")
   }
 
   /** q185: packing-efficiency audit — the readout a q48 rollout is
@@ -110,7 +71,7 @@ object Packing {
     * that says whether the greedy scan actually achieves it per
     * source, or a source's length mix needs a different budget.
     *
-    * Scale notes: runs OVER the q48 assignment (same sharded
+    * Scale notes: runs OVER the q48 assignment (same per-source
     * `flatMapGroups` scan), then two map-side-combined aggregates —
     * (source, pack) sized, then |sources| sized. All counters exact
     * integers; ONE final IEEE division per source. */

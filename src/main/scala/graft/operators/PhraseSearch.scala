@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.ArtifactStore.{readTable, writeTable}
 import graft.Tables
 
 /** q194: exact phrase search through a PERSISTED positional postings
@@ -50,13 +50,12 @@ object PhraseSearch {
   /** The positional index write — exposed for specs over planted
     * corpora. 1-based positions (the oracle's generate_series base). */
   private[graft] def buildPosIndex(docs: DataFrame, staging: String): Unit =
-    docs.filter(col("doc_id").isNotNull && col("text").isNotNull)
+    writeTable(docs.filter(col("doc_id").isNotNull && col("text").isNotNull)
       .select(col("doc_id"),
         posexplode(TextAnalysis.words(col("text"))).as(Seq("pos0", "term")))
       .select(col("term"), col("doc_id"), (col("pos0") + 1).cast("long").as("pos"))
       .withColumn("bucket", bucketCol(col("term")))
-      .repartition(col("bucket"), col("doc_id") % 8)
-      .write.partitionBy("bucket").parquet(staging)
+      .repartition(col("bucket"), col("doc_id") % 8), staging, "bucket")
 
   /** Build (or reuse) the positional postings artifact for `dir`. */
   def ensurePosIndex(s: SparkSession, dir: String): String = {
@@ -68,12 +67,6 @@ object PhraseSearch {
     }
   }
 
-  /** Declared schema — an empty corpus writes a footerless zero-row
-    * artifact and the lookup must return empty, not throw. */
-  private val posSchema = StructType(Seq(
-    StructField("term", StringType), StructField("doc_id", LongType),
-    StructField("pos", LongType), StructField("bucket", LongType)))
-
   /** q194: docs containing [[Phrase]] as adjacent tokens — (doc_id,
     * n_occ, first_pos), top-20 by occurrences then doc_id. */
   def phraseSearch(s: SparkSession, dir: String): DataFrame =
@@ -82,7 +75,7 @@ object PhraseSearch {
   private[graft] def lookupPhrase(s: SparkSession, path: String,
       phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty)
-    val idx = s.read.schema(posSchema).parquet(path)
+    val idx = readTable(s, path)
     val arms = phrase.zipWithIndex.map { case (t, i) =>
       idx.filter(col("bucket") === lit(PostingsIndex.bucketOf(t)) &&
           col("term") === lit(t))

@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
+import graft.ArtifactStore.{readTable, writeTable}
 import graft.Tables
 
 /** q109/q197: persisted term-partitioned inverted index — the lexical
@@ -92,8 +92,8 @@ object PostingsIndex {
       .localCheckpoint() // two consumers: the postings write + termstats
     // spread a hot bucket across tasks by doc_id, not one task per
     // bucket; partitionBy still lands each bucket in its own dir
-    post.repartition(col("bucket"), col("doc_id") % 8)
-      .write.partitionBy("bucket").parquet(s"$staging/postings")
+    writeTable(post.repartition(col("bucket"), col("doc_id") % 8),
+      s"$staging/postings", "bucket")
     // per-term pruning bounds over the |vocab|-row aggregate; guard the
     // empty corpus (avgdl undefined, and there are no terms to bound)
     val avgdl = if (nDocs == 0) 1.0 else sumDl.toDouble / nDocs.toDouble
@@ -104,15 +104,13 @@ object PostingsIndex {
       (mtf * (Search.K1 + 1.0)) /
       (mtf + lit(Search.K1) * (lit(1.0) - Search.B +
         lit(Search.B) * col("min_dl").cast("double") / lit(avgdl)))
-    post.groupBy(col("term"))
+    writeTable(post.groupBy(col("term"))
       .agg(count(lit(1)).as("df"), max(col("tf")).as("max_tf"),
         min(col("dl")).as("min_dl"))
       .withColumn("max_impact", ub)
       .withColumn("bucket", bucketCol(col("term")))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").parquet(s"$staging/termstats")
-    statsFrame(docs.sparkSession, nDocs, sumDl)
-      .write.parquet(s"$staging/stats")
+      .repartition(col("bucket")), s"$staging/termstats", "bucket")
+    writeTable(statsFrame(docs.sparkSession, nDocs, sumDl), s"$staging/stats")
   }
 
   /** One-row (n_docs, sum_dl) frame. */
@@ -134,21 +132,6 @@ object PostingsIndex {
     }
   }
 
-  /** The artifacts' schemas, declared so reads never depend on
-    * inference — an EMPTY corpus writes zero-row partitioned artifacts
-    * with no footers to infer from, and lookups must return empty,
-    * not throw (the EmptyInputSpec contract). */
-  private val indexSchema = StructType(Seq(
-    StructField("term", StringType), StructField("doc_id", LongType),
-    StructField("tf", LongType), StructField("dl", LongType),
-    StructField("bucket", LongType)))
-  private val termStatsSchema = StructType(Seq(
-    StructField("term", StringType), StructField("df", LongType),
-    StructField("max_tf", LongType), StructField("min_dl", LongType),
-    StructField("max_impact", DoubleType), StructField("bucket", LongType)))
-  private val statsSchema = StructType(Seq(
-    StructField("n_docs", LongType), StructField("sum_dl", LongType)))
-
   /** q109: conjunctive lookup of [[Terms]] through the index. Output:
     * (doc_id, score=Σtf) for docs containing EVERY term, top-20 by
     * score desc then doc_id — deterministic. */
@@ -161,7 +144,7 @@ object PostingsIndex {
   private def prunedPostings(s: SparkSession, path: String,
       terms: Seq[String]): DataFrame = {
     val buckets = terms.map(bucketOf).distinct
-    s.read.schema(indexSchema).parquet(s"$path/postings")
+    readTable(s, s"$path/postings")
       .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
   }
 
@@ -261,13 +244,13 @@ object PostingsIndex {
 
   private[graft] def bm25TopKTerms(s: SparkSession, path: String,
       terms: Seq[String]): DataFrame = {
-    val statsRow = s.read.schema(statsSchema).parquet(s"$path/stats")
+    val statsRow = readTable(s, s"$path/stats")
       .collect().headOption
     val nDocs = statsRow.map(_.getLong(0)).getOrElse(0L)
     val sumDl = statsRow.map(_.getLong(1)).getOrElse(0L)
     if (nDocs == 0L) return emptyScored(s, terms)
     val buckets = terms.map(bucketOf).distinct
-    val tstats = s.read.schema(termStatsSchema).parquet(s"$path/termstats")
+    val tstats = readTable(s, s"$path/termstats")
       .where(col("bucket").isin(buckets: _*) && col("term").isin(terms: _*))
       .select(col("term"), col("df"), col("max_impact"))
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap

@@ -266,47 +266,35 @@ object PqOp {
   /** Bump when the stored schema, quantizer, or encoding changes. */
   private val LayoutVersion = "v1"
 
-  private val booksSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("m", org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("cell", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("c", org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))))
-
-  private val codesSchema = org.apache.spark.sql.types.StructType(
-    org.apache.spark.sql.types.StructField("vec_id",
-      org.apache.spark.sql.types.LongType) +:
-    (0 until M).map(m => org.apache.spark.sql.types.StructField(s"code$m",
-      org.apache.spark.sql.types.LongType)))
-
   /** Build the PQ index under `staging`: train the M subspace
     * codebooks, PQ-encode the corpus, write
     *   staging/codebooks.parquet  (m, cell, c)        — M·Ks rows, tiny
     *   staging/codes.parquet      (vec_id, code0..M−1) — M longs/vector
     * An untrainable corpus (empty / no seed vectors) publishes an empty
-    * codebook table and zero codes, so the read path degenerates
-    * typed-empty instead of rebuilding forever. */
+    * codebook table and no codes; the read path sees the empty books
+    * and returns before it reads codes, instead of rebuilding forever. */
   private[graft] def buildPq(embeddings: DataFrame, staging: String): Unit = {
-    val spark = embeddings.sparkSession
     val qv = unitQuantized(embeddings).localCheckpoint()
     val books = trainSubs(qv)
-    val bookRows = books.zipWithIndex.flatMap { case (b, m) =>
-      b.map { case (cell, c) => (m, cell, c) } }
-    spark.createDataFrame(bookRows).toDF("m", "cell", "c")
-      .coalesce(1).write.parquet(s"$staging/codebooks.parquet")
-    val enc =
-      if (books.exists(_.isEmpty))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], codesSchema)
-      else encode(qv, books)
-        .select(col("vec_id") +: (0 until M).map(m => col(s"code$m")): _*)
-    enc.write.parquet(s"$staging/codes.parquet")
+    writeBooks(embeddings.sparkSession, books, staging)
+    if (!books.exists(_.isEmpty))
+      graft.ArtifactStore.writeTable(encode(qv, books)
+        .select(col("vec_id") +: (0 until M).map(m => col(s"code$m")): _*),
+        s"$staging/codes.parquet")
   }
 
-  /** Collect the persisted codebooks — ≤ M·Ks rows, bounded. Explicit
-    * schema: an untrainable build's codebook file may carry no footer
-    * to infer from (the PostingsIndex precedent). */
+  /** Write the M codebooks as one (m, cell, c) table — M·Ks rows. */
+  private[graft] def writeBooks(spark: SparkSession,
+      books: Seq[Seq[(Long, Seq[Double])]], path: String): Unit = {
+    val bookRows = books.zipWithIndex.flatMap { case (b, m) =>
+      b.map { case (cell, c) => (m, cell, c) } }
+    graft.ArtifactStore.writeTable(spark.createDataFrame(bookRows).toDF("m", "cell", "c")
+      .coalesce(1), s"$path/codebooks.parquet")
+  }
+
+  /** Collect the persisted codebooks — ≤ M·Ks rows, bounded. */
   private[graft] def loadBooks(s: SparkSession, path: String): Seq[Seq[(Long, Seq[Double])]] = {
-    val rows = s.read.schema(booksSchema).parquet(s"$path/codebooks.parquet")
+    val rows = graft.ArtifactStore.readTable(s, s"$path/codebooks.parquet")
       .orderBy("m", "cell").collect()
     (0 until M).map(m => rows.filter(_.getInt(0) == m)
       .map(r => r.getLong(1) -> r.getSeq[Double](2).toSeq).toSeq)
@@ -330,7 +318,7 @@ object PqOp {
         .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
     if (books.exists(_.isEmpty) || queries.isEmpty) None
     else Some(scoreEncoded(
-      s.read.schema(codesSchema).parquet(s"$path/codes.parquet"), queries, books))
+      graft.ArtifactStore.readTable(s, s"$path/codes.parquet"), queries, books))
   }
 
   /** The ADC top-[[TopK]] ranking over a scored frame — bounded-heap

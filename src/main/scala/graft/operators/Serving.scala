@@ -59,18 +59,6 @@ object Serving {
         count(lit(1)).as("n_events"))
       .orderBy(col("event_type").asc_nulls_last)
 
-  /** Sketch-based variant of [[countDistinct]] for the 100 TB path:
-    * approx_count_distinct is a fixed-size HyperLogLog++ per group —
-    * constant memory and one narrow shuffle regardless of cardinality,
-    * where exact distinct must shuffle every (group, user) pair. */
-  def countDistinctApprox(events: DataFrame, rsd: Double = 0.02): DataFrame =
-    events
-      .filter(col("value") > 5.0)
-      .groupBy(col("event_type"))
-      .agg(approx_count_distinct(col("user_id"), rsd).as("n_users_approx"),
-        count(lit(1)).as("n_events"))
-      .orderBy(col("event_type").asc_nulls_last)
-
   /** q39: deterministic sample pagination — the dashboard's seeded
     * ORDER BY RANDOM() LIMIT/OFFSET page (app.py:120,147) re-expressed
     * as a hash order, which is reproducible on any engine and any

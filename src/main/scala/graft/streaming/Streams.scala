@@ -3,8 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 
 /** Streaming operators (reference analog: the Kafka→raw/cleansed
@@ -17,9 +16,8 @@ import graft.Tables
   * logic a production stream runs.
   *
   * Scale notes: windowed aggs and dropDuplicates shuffle on
-  * (window/key) — state store size is bounded by the watermark horizon;
-  * sessionization uses flatMapGroupsWithState, whose state is one open
-  * session per key, with event-time timeout eviction.
+  * (window/key) — state store size is bounded by the watermark horizon,
+  * sessionization included (Spark's `session_window`).
   */
 object Streams {
 
@@ -93,71 +91,19 @@ object Streams {
       .orderBy("user_id", "session_id")
   }
 
-  case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long, value: Double)
-  case class SessionState(start: Long, end: Long, n: Long, total: Double)
-  case class SessionsState(sessions: List[SessionState])
-  case class Session(user_id: Long, session_start: java.sql.Timestamp,
-    session_end: java.sql.Timestamp, n_events: Long, total_value: Double)
-
-  /** Gap-based sessionization for streams — EXACT replay of the batch
-    * analog under any micro-batch split of the same events.
+  /** Gap-based sessionization for streams: [[sessionAgg]], Spark's
+    * `session_window` aggregate, under a one-hour watermark. A session
+    * is emitted once the watermark passes its window end (last event +
+    * gap), when no admissible event can extend or bridge it, so any
+    * micro-batch split of the same events emits the batch analog's
+    * sessions (StreamingSpec replays 1/2/3-batch splits). Late events
+    * within the watermark merge into, or bridge, the sessions Spark
+    * keeps in its state store.
     *
-    * State per user is the list of sessions the watermark has not yet
-    * passed (not just the single open one): a session is only emitted —
-    * and only dropped from state — once `end + gap ≤ watermark`, at
-    * which point no admissible event (ts > watermark) can extend or
-    * bridge it, so the emitted session is final and identical to the
-    * batch result. Until then every arriving event folds into the
-    * session set: it extends the session(s) within `gap` of it, merging
-    * the two neighbors it bridges, or starts its own. Out-of-order
-    * events within the watermark therefore land exactly where the batch
-    * sort would put them — including several late events spanning an
-    * old session across different micro-batches, the case the previous
-    * single-open-session state emitted as fragments.
-    *
-    * Scale notes: state per user is bounded by the watermark horizon
-    * (sessions older than it are evicted on the event-time timeout), and
-    * the per-batch fold touches only that user's surviving sessions. */
-  def sessionizeStream(events: DataFrame, gapSeconds: Long = 1800): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val gapMs = gapSeconds * 1000L
-    events.withWatermark("ts", "1 hour")
-      .selectExpr("event_id", "ts", "user_id", "value").as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionsState, Session](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, evs: Iterator[Ev], state: GroupState[SessionsState]) =>
-          def toSession(st: SessionState): Session = Session(userId,
-            new java.sql.Timestamp(st.start), new java.sql.Timestamp(st.end),
-            st.n, st.total)
-          // fold one event into the disjoint session list: merge with
-          // every session within `gap` (≤ 2: the one it bridges on each
-          // side), else start a new one
-          def insert(ss: List[SessionState], e: Ev): List[SessionState] = {
-            val t = e.ts.getTime
-            val (near, far) = ss.partition(st =>
-              t >= st.start - gapMs && t <= st.end + gapMs)
-            SessionState(
-              (t :: near.map(_.start)).min, (t :: near.map(_.end)).max,
-              near.map(_.n).sum + 1L, near.map(_.total).sum + e.value) :: far
-          }
-          val existing = state.getOption.map(_.sessions).getOrElse(Nil)
-          val merged =
-            if (state.hasTimedOut) existing
-            else evs.foldLeft(existing)(insert)
-          val wm = state.getCurrentWatermarkMs()
-          val (closed, open) = merged.partition(st => st.end + gapMs <= wm)
-          if (open.isEmpty) state.remove()
-          else {
-            state.update(SessionsState(open))
-            // wake when the earliest open session becomes final; the
-            // timestamp must sit strictly past the current watermark
-            state.setTimeoutTimestamp(math.max(open.map(_.end + gapMs).min, wm + 1))
-          }
-          closed.sortBy(st => (st.start, st.end)).map(toSession).iterator
-      }.toDF()
-  }
+    * Scale notes: state per user is the sessions the watermark has not
+    * passed; Spark evicts each one as it is emitted. */
+  def sessionizeStream(events: DataFrame, gapSeconds: Long = 1800): DataFrame =
+    sessionAgg(events.withWatermark("ts", "1 hour"), gapSeconds).drop("session_window")
 
   /** Stream-static enrichment: annotate a live stream with a broadcast
     * dimension snapshot (the reference's ugc-stream × metadata join
@@ -430,10 +376,9 @@ object Streams {
 
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
       versionDir: org.apache.hadoop.fs.Path, m: Manifest): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(versionDir, "_manifest"), true)
-    try out.write((m.buckets.toSeq.sorted.map { case (b, v) => s"$b:$v" } ++
-        m.schema.map(SchemaLine + _.json)).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
+    graft.ArtifactStore.writeUtf8(fs, new org.apache.hadoop.fs.Path(versionDir, "_manifest"),
+      (m.buckets.toSeq.sorted.map { case (b, v) => s"$b:$v" } ++
+        m.schema.map(SchemaLine + _.json)).mkString("\n"))
   }
 
   private[graft] def readManifest(spark: SparkSession, path: String,
@@ -445,27 +390,14 @@ object Streams {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) Manifest(Map.empty, None)
     else {
-      val (schema, buckets) = readUtf8(fs, p).split("\n").toSeq.filter(_.nonEmpty)
+      val (schema, buckets) = graft.ArtifactStore.readUtf8(fs, p).split("\n").toSeq.filter(_.nonEmpty)
         .partition(_.startsWith(SchemaLine))
       Manifest(buckets.map { line =>
           val Array(b, ver) = line.split(":")
           b.toInt -> ver.toLong
         }.toMap,
-        schema.headOption.map(l =>
-          DataType.fromJson(l.drop(SchemaLine.length)).asInstanceOf[StructType]))
+        schema.headOption.map(l => graft.ArtifactStore.parseSchema(l.drop(SchemaLine.length))))
     }
-  }
-
-  private def readUtf8(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try {
-      val buf = new java.io.ByteArrayOutputStream()
-      val chunk = new Array[Byte](4096)
-      var n = in.read(chunk)
-      while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-      new String(buf.toByteArray, "UTF-8")
-    } finally in.close()
   }
 
   /** Optimistic commit of snapshot version `v`: atomically claims
@@ -580,18 +512,23 @@ object Streams {
     * carry no event time and are excluded explicitly (the oracle
     * filters identically). */
   def sessionizeBuiltin(events: DataFrame, gapSeconds: Long = 1800): DataFrame = {
-    val agg = events
+    val seq = Window.partitionBy(col("user_id")).orderBy(col("session_start"))
+    sessionAgg(events, gapSeconds)
+      .withColumn("session_seq", row_number().over(seq).cast("long"))
+      .select("user_id", "session_seq", "session_start", "session_end",
+        "n_events", "total_value")
+      .orderBy("user_id", "session_seq")
+  }
+
+  /** One row per (user, `session_window`): the session aggregate
+    * [[sessionizeBuiltin]] and [[sessionizeStream]] share. */
+  private def sessionAgg(events: DataFrame, gapSeconds: Long): DataFrame =
+    events
       .where(col("ts").isNotNull)
       .groupBy(col("user_id"), session_window(col("ts"), s"$gapSeconds seconds"))
       .agg(min(col("ts")).as("session_start"), max(col("ts")).as("session_end"),
         count(lit(1)).as("n_events"),
         sum(col("value").cast("decimal(20,4)")).cast("double").as("total_value"))
-    val seq = Window.partitionBy(col("user_id")).orderBy(col("session_start"))
-    agg.withColumn("session_seq", row_number().over(seq).cast("long"))
-      .select("user_id", "session_seq", "session_start", "session_end",
-        "n_events", "total_value")
-      .orderBy("user_id", "session_seq")
-  }
 
   /** q131: [[sessionizeBuiltin]] over the events table. */
   def q131(s: SparkSession, dir: String): DataFrame =

@@ -377,22 +377,6 @@ class CorpusOpsSpec extends SparkTestBase {
     }
   }
 
-  test("sharded packing covers every doc once and respects the budget per shard") {
-    val docs = Tables.documents(spark, sfDir)
-    val out = Packing.packSequencesSharded(docs, Packing.Budget, shards = 4)
-    assert(out.count() === docs.count())
-    assert(out.select("doc_id").distinct().count() === docs.count())
-    val packs = out.groupBy("source", "shard", "pack_id")
-      .agg(sum("n_tokens").as("tok"), count(lit(1)).as("n")).collect()
-    packs.foreach { r =>
-      assert(r.getAs[Long]("tok") <= Packing.Budget || r.getAs[Long]("n") == 1L)
-    }
-    // deterministic across runs
-    val again = Packing.packSequencesSharded(docs, Packing.Budget, shards = 4)
-      .collect().map(_.toString).sorted
-    assert(out.collect().map(_.toString).sorted === again)
-  }
-
   test("q48 on the corpus: pack token sums stay within budget unless singleton") {
     val out = Packing.packSequences(spark, sfDir)
     val packs = out.groupBy("source", "pack_id")

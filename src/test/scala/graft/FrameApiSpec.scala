@@ -57,18 +57,6 @@ class FrameApiSpec extends SparkTestBase {
     assert(TextAnalysis.tokenCount(messy).count() === 4)
   }
 
-  test("approx count-distinct tracks the exact count within sketch error") {
-    val events = Tables.events(spark, sfDir)
-    val exact = graft.operators.Serving.countDistinct(spark, sfDir).collect()
-      .map(r => r.getString(0) -> r.getAs[Long]("n_users")).toMap
-    val approx = graft.operators.Serving.countDistinctApprox(events).collect()
-      .map(r => r.getString(0) -> r.getAs[Long]("n_users_approx")).toMap
-    exact.foreach { case (k, n) =>
-      val a = approx(k)
-      assert(math.abs(a - n).toDouble / n < 0.15, s"$k: approx $a vs exact $n")
-    }
-  }
-
   test("facet search composes pushable equality/IN/array-contains filters") {
     import graft.operators.Serving._
     val items = Seq(

@@ -206,6 +206,38 @@ class IngestSpec extends SparkTestBase {
     assert(live().toSet === Set(s"${base}_eeee5555", s"${base}_extra_dddd4444"))
   }
 
+  private def tablePath(): String =
+    java.nio.file.Files.createTempDirectory("graft_table").resolve("t").toString
+
+  test("ArtifactStore.writeTable: a zero-row partitioned table reads back as a typed " +
+      "empty frame, partition columns last") {
+    val path = tablePath()
+    ArtifactStore.writeTable(spark.range(0).select(col("id").as("cell"),
+      col("id").cast("string").as("name"), lit(1.5).as("score")), path, "cell")
+    val back = ArtifactStore.readTable(spark, path)
+    assert(back.schema.map(f => f.name -> f.dataType) ===
+      Seq("name" -> StringType, "score" -> DoubleType, "cell" -> LongType))
+    assert(back.count() === 0)
+  }
+
+  test("ArtifactStore.readTable starts no Spark job") {
+    val path = tablePath()
+    ArtifactStore.writeTable(spark.range(6).select(col("id"), (col("id") % 3).as("part")),
+      path, "part")
+    var back: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring { back = ArtifactStore.readTable(spark, path) } === 0)
+    assert(back.columns.toSeq === Seq("id", "part"))
+  }
+
+  test("ArtifactStore: _schema is never read as data") {
+    val path = tablePath()
+    ArtifactStore.writeTable(spark.range(4).toDF("id"), path)
+    assert(new java.io.File(path, "_schema").isFile)
+    val back = ArtifactStore.readTable(spark, path)
+    assert(!back.inputFiles.exists(_.endsWith("_schema")))
+    assert(back.collect().map(_.getLong(0)).sorted.toSeq === Seq(0L, 1L, 2L, 3L))
+  }
+
   test("ArtifactStore.vacuumStaging sweeps only stale orphans") {
     val root = ArtifactStore.warehouseRoot(spark)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -26,11 +26,11 @@ class JobCountSpec extends SparkTestBase {
   // The graph family reads build-once artifacts (the τ=0.8 pair table,
   // q208's co-purchase edges); one untimed call builds them, so the pin
   // counts only the operator's own rounds, checkpoints and probes.
-  Seq("q46_dedup_cc" -> 13, "q87_pagerank" -> 24, "q93_dedup_survivor" -> 14,
-      "q117_label_propagation" -> 26, "q121_corpus_overlap" -> 11,
-      "q138_triangle_support" -> 7, "q141_split_leakage" -> 4,
-      "q158_contamination_hops" -> 17, "q195_kcore" -> 23,
-      "q208_common_neighbors" -> 14).foreach { case (q, count) =>
+  Seq("q46_dedup_cc" -> 12, "q87_pagerank" -> 23, "q93_dedup_survivor" -> 13,
+      "q117_label_propagation" -> 25, "q121_corpus_overlap" -> 10,
+      "q138_triangle_support" -> 6, "q141_split_leakage" -> 3,
+      "q158_contamination_hops" -> 16, "q195_kcore" -> 22,
+      "q208_common_neighbors" -> 13).foreach { case (q, count) =>
     test(s"$q runs in $count Spark jobs once its artifacts exist") {
       jobsOf(q)
       val n = jobsOf(q)

@@ -184,19 +184,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(fromIndex.nonEmpty)
   }
 
-  test("persisted IVF index search equals in-memory ivfTopK") {
-    val em = Tables.embeddings(spark, sfDir)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    graft.operators.IvfIndex.build(em, dir, nlist = 16)
-    val fromIndex = graft.operators.IvfIndex
-      .search(spark, dir, em.filter(col("vec_id") < 10), nprobe = 4, k = 10)
-      .collect().map(_.toString).toSeq
-    val inMemory = Similarity.ivfTopK(em, nlist = 16, nprobe = 4, k = 10)
-      .collect().map(_.toString).toSeq
-    assert(fromIndex === inMemory)
-    assert(new java.io.File(s"$dir/corpus").list().exists(_.startsWith("cell=")))
-  }
-
   test("cell-blocked knn: k neighbors per vector, mostly agreeing with exact knn") {
     val em = Tables.embeddings(spark, sfDir)
     val exact = Similarity.knnJoin(em).collect()

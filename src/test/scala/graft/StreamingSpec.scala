@@ -684,39 +684,6 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("q120 window-HLL merge streamed under 1/2/3 micro-batch splits equals batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    // events across 3 hours so every trailing window has multi-hour
-    // merges; user ids overlap across hours so MAX merges do real work
-    val events = (1 to 90).map(i =>
-      E(i.toLong, tsAt(10 + i % 3, i % 60), (i % 17).toLong, "e", 1.0))
-    // batch truth: the two-level merge q120 reports from (observed
-    // window ends only — the stream state keeps candidate ends too)
-    val batchDF = graft.operators.Hll.mergedWindowRegisters(events.toDF())
-    val batch = batchDF.collect()
-      .map(r => (r.getTimestamp(0), r.getAs[Long]("j")) -> r.getAs[Int]("mj")).toMap
-    val observedWh = batch.keySet.map(_._1)
-    assert(batch.nonEmpty)
-    for ((split, n) <- Seq(Seq(90), Seq(45, 45), Seq(30, 30, 30)).zipWithIndex) {
-      val src = MemoryStream[E]
-      val q = graft.operators.Hll.windowRegisterTable(src.toDF())
-        .writeStream.format("memory").queryName(s"hllw_$n")
-        .outputMode("complete").start()
-      try {
-        var off = 0
-        split.foreach { sz =>
-          src.addData(events.slice(off, off + sz): _*); off += sz
-          q.processAllAvailable()
-        }
-        val streamed = spark.table(s"hllw_$n").collect()
-          .map(r => (r.getTimestamp(0), r.getAs[Long]("j")) -> r.getAs[Int]("mj"))
-          .filter { case ((wh, _), _) => observedWh.contains(wh) }.toMap
-        assert(streamed === batch, s"split $split diverged from batch")
-      } finally q.stop()
-    }
-  }
-
   test("attribution: last click wins, ties break to higher id, window closed at +1800s") {
     import spark.implicits._
     val e = Seq(
