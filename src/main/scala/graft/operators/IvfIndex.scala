@@ -38,9 +38,7 @@ object IvfIndex {
     * which is what lets q72 share q65's generated oracle. */
   def searchExact(spark: SparkSession, path: String, queries: DataFrame,
       nprobe: Int = 3, k: Int = 10): DataFrame = {
-    val cents = readTable(spark, s"$path/centroids.parquet")
-      .orderBy("cell").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+    val cents = KMeansOp.collectCents(readTable(spark, s"$path/centroids.parquet").orderBy("cell"))
     val corpus = readTable(spark, s"$path/corpus")
       .select(col("vec_id").as("__cand_id"), col("e").as("ec"),
         col("nrm").as("nc"), col("cell"))
@@ -83,9 +81,7 @@ object IvfIndex {
     * batch-sized narrow assignment + one partitioned append — the
     * corpus in place is never rewritten. */
   def upsertBatch(s: SparkSession, path: String, batch: DataFrame): Unit = {
-    val cents = readTable(s, s"$path/centroids.parquet")
-      .orderBy("cell").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+    val cents = KMeansOp.collectCents(readTable(s, s"$path/centroids.parquet").orderBy("cell"))
     // an empty (untrainable) index has no cells — nothing to assign to
     if (cents.nonEmpty) {
       val qv = KMeansOp.quantized(batch)
@@ -116,34 +112,10 @@ object IvfIndex {
     searchExact(s, path, em.filter(col("vec_id") < 10))
   }
 
-  /** q157 oracle: [[KMeansOp.kmeansCtes]] trained on the base split
-    * with the assign-ALL arm, then the q65/q72 probe-and-score replay
-    * over the full assigned corpus. */
-  def ivfUpsertOracleSql(nprobe: Int = 3, k: Int = 10): String = {
-    val cR = s"c${KMeansOp.Rounds}"
-    s"""WITH ${KMeansOp.kmeansScaledCtes(KMeansOp.K,
-          "vec_id % 5 <> 0", includeAllAssign = true)},
-       |n AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-       |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |    list_transform(range(1, len(embedding)+1),
-       |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))), (x,y) -> x+y)) AS nrm
-       |  FROM embeddings WHERE embedding IS NOT NULL),
-       |pr AS (SELECT qv.vec_id AS query_id, $cR.cell,
-       |    ROW_NUMBER() OVER (PARTITION BY qv.vec_id ORDER BY
-       |      ${KMeansOp.dist2Sql(cR)}, $cR.cell) AS cell_rank
-       |  FROM qva qv CROSS JOIN $cR WHERE qv.vec_id < 10),
-       |probed AS (SELECT query_id, cell FROM pr WHERE cell_rank <= $nprobe),
-       |cand AS (SELECT afa.vec_id, afa.cell, n.e, n.nrm FROM afa JOIN n USING (vec_id)),
-       |p AS (SELECT probed.query_id, cand.vec_id AS neighbor_id,
-       |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
-       |    list_transform(range(1, len(nq.e)+1), i -> nq.e[i]*cand.e[i])), (x,y) -> x+y)
-       |   / (nq.nrm * cand.nrm) AS sim
-       |  FROM probed JOIN cand USING (cell) JOIN n nq ON nq.vec_id = probed.query_id
-       |  WHERE cand.vec_id <> probed.query_id),
-       |r AS (SELECT query_id, neighbor_id, sim,
-       |  ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rank
-       |  FROM p)
-       |SELECT query_id, neighbor_id, rank, ROUND(sim, 9) AS sim_r
-       |FROM r WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
-  }
+  /** q157 oracle: [[KMeansOp.kmeansScaledCtes]] trained on the base
+    * split with the assign-ALL arm, then the q65/q72 probe-and-score
+    * replay over the full assigned corpus. */
+  def ivfUpsertOracleSql(nprobe: Int = 3, k: Int = 10): String =
+    s"""WITH ${KMeansOp.kmeansScaledCtes("vec_id % 5 <> 0", includeAllAssign = true)},
+       |${Similarity.ivfProbeScoreOracleSql("qva", "afa", nprobe, k)}""".stripMargin
 }

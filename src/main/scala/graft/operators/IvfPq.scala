@@ -57,11 +57,11 @@ import graft.Tables
   * pruning), ADC-score each probed cell against the query's PER-CELL
   * residual LUT, bounded-heap top-k.
   *
-  * Determinism: coarse train replays [[KMeansOp]]'s proven Lloyd
-  * conventions at Dim=64 over the unit-quantized frame (integral-double
-  * vectors, exact integer recenter sums, fixed left-to-right folds,
-  * ties by lowest cell id); the PQ half is exactly q111's machinery
-  * pointed at the integral residual frame.
+  * Determinism: coarse train is [[KMeansOp.lloyd]] at Dim=64 over the
+  * unit-quantized frame (integral-double vectors, exact integer
+  * recenter sums, fixed left-to-right folds, ties by lowest cell id);
+  * the PQ half is exactly q111's machinery pointed at the integral
+  * residual frame.
   */
 object IvfPq {
 
@@ -72,7 +72,6 @@ object IvfPq {
     * size, measured 10.7× at 100× data). */
   val MinNList = 16
   val NProbe = 4
-  val CoarseRounds = 2
   private val Dim = KMeansOp.Dim
 
   /** Bump when the stored schema, quantizer, or encoding changes.
@@ -82,40 +81,15 @@ object IvfPq {
   // ------------------------------------------------------------------
   // Coarse quantizer: Lloyd at full Dim over the unit-quantized frame.
 
-  /** [[KMeansOp]] recenter at Dim — exact integer sums over the
-    * integral-double vectors, one bounded collect of ≤ nlist rows. */
-  private def recenterCoarse(assigned: DataFrame,
-      old: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
-    val aggs = count(lit(1)).cast("double").as("n") +:
-      (1 to Dim).map(i => sum(element_at(col("q"), i)).as(s"s$i"))
-    val rows = assigned.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => r.getLong(0) ->
-        (r.getDouble(1), (1 to Dim).map(i => r.getDouble(1 + i))))
-      .toMap
-    old.map { case (id, c) =>
-      rows.get(id) match {
-        case Some((n, sums)) => id -> sums.map(_ / n)
-        case None => id -> c
-      }
-    }
-  }
-
   /** Seed = the corpus-scaled-nlist lowest-md5(vec_id) rows (a
     * hash-scrambled corpus sample — immune to a degenerate id-prefix,
-    * one bounded TakeOrdered), then [[CoarseRounds]] Lloyd rounds. The
-    * count runs on the caller's already-checkpointed frame (one cached
-    * scan); assignment auto-switches to the broadcast argmin kernel
-    * past [[KMeansOp.LiteralAssignMaxK]] cells. */
+    * one bounded TakeOrdered), then [[KMeansOp.lloyd]]. The count runs
+    * on the caller's already-checkpointed frame (one cached scan). */
   private[graft] def trainCoarse(qv: DataFrame): Seq[(Long, Seq[Double])] = {
     val nlist = KMeansOp.scaledNList(qv.count(), MinNList)
-    var cents: Seq[(Long, Seq[Double])] = qv
+    KMeansOp.lloyd(qv, KMeansOp.collectCents(qv
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(nlist).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
-    for (_ <- 1 to CoarseRounds if cents.nonEmpty)
-      cents = recenterCoarse(KMeansOp.assignAuto(qv, cents), cents)
-    cents
+      .limit(nlist)))
   }
 
   /** Coarse-assign, then replace q by the floored residual q − c(cell)
@@ -244,18 +218,14 @@ object IvfPq {
     val em = Tables.embeddings(s, dir)
     val path = graft.ArtifactStore.ensureCurrent(s, s"ivfpq_$LayoutVersion",
       Tables.dirFingerprint(s, dir,
-        s"ivfpq;res;md5seed;${KMeansOp.nlistLadderTag(MinNList)};cr=$CoarseRounds;m=${PqOp.M};ks=${PqOp.Ks};" +
-        s"r=${PqOp.Rounds};scale=${KMeansOp.ScaleQ};${em.schema.catalogString}")) {
+        s"ivfpq;res;md5seed;${KMeansOp.nlistLadderTag(MinNList)};cr=${KMeansOp.Rounds};m=${PqOp.M};ks=${PqOp.Ks};" +
+        s"r=${KMeansOp.Rounds};scale=${KMeansOp.ScaleQ};${em.schema.catalogString}")) {
       staging => buildIvfPq(em, staging)
     }
-    val cents = readTable(s, s"$path/cells.parquet")
-      .orderBy("cell").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+    val cents = KMeansOp.collectCents(readTable(s, s"$path/cells.parquet").orderBy("cell"))
     val books = PqOp.loadBooks(s, path)
-    val queries: Seq[(Long, Seq[Double])] =
-      PqOp.unitQuantized(em).filter(col("vec_id") < PqOp.NQ)
-        .orderBy("vec_id").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+    val queries = KMeansOp.collectCents(
+      PqOp.unitQuantized(em).filter(col("vec_id") < PqOp.NQ).orderBy("vec_id"))
     if (cents.isEmpty || books.exists(_.isEmpty) || queries.isEmpty) None
     else {
       val codes = readTable(s, s"$path/codes")
@@ -283,9 +253,7 @@ object IvfPq {
       byResidual: Boolean = true): DataFrame = {
     val qv = PqOp.unitQuantized(embeddings).localCheckpoint()
     val cents = trainCoarse(qv)
-    val queries: Seq[(Long, Seq[Double])] =
-      qv.filter(col("vec_id") < PqOp.NQ).orderBy("vec_id").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+    val queries = KMeansOp.collectCents(qv.filter(col("vec_id") < PqOp.NQ).orderBy("vec_id"))
     if (cents.isEmpty || queries.isEmpty)
       return PqOp.emptyResult(embeddings.sparkSession, "dist_r")
     val enc =
@@ -334,43 +302,22 @@ object IvfPq {
   // Oracle: coarse chain + residual frame + q111's PQ chains, composed.
 
   /** Coarse-quantizer CTEs over the shared `qv` (unit-quantized):
-    * md5-scrambled seed `cg0`, [[CoarseRounds]] assign/recenter rounds,
-    * final assignment `gaf` (vec_id, q, cell) and per-query probe set
-    * `gprobed`. Same shapes as [[KMeansOp.kmeansCtes]], renamed to
-    * compose with [[PqOp]]'s chains under one WITH. */
+    * [[KMeansOp.lloydCtes]] stemmed `g` from the md5-scrambled seed
+    * `gc0` — final centroids `gc<Rounds>`, final assignment `gaf`
+    * (vec_id, q, cell) — and the per-query probe set `gprobed`. */
   private def coarseCtes: String = {
     // the corpus-scaled seed count, re-derived from the same COUNT(*)
     val nlistSql = KMeansOp.scaledNListSql("(SELECT COUNT(*) FROM qv)", MinNList)
-    def lr64(expr: String) = PqOp.lr(Dim, expr)
-    def d2(cin: String) =
-      s"${lr64("qv.q[i]*qv.q[i]")} - 2.0 * ${lr64(s"qv.q[i]*$cin.c[i]")} + ${lr64(s"$cin.c[i]*$cin.c[i]")}"
-    def assignCte(cin: String, aout: String) =
-      s"""$aout AS (SELECT vec_id, q, cell FROM (
-         |  SELECT qv.vec_id, qv.q, $cin.cell,
-         |    ROW_NUMBER() OVER (PARTITION BY qv.vec_id ORDER BY
-         |      ${d2(cin)}, $cin.cell) AS rn
-         |  FROM qv CROSS JOIN $cin) WHERE rn = 1)""".stripMargin
-    def recenterCte(ain: String, cin: String, cout: String) =
-      s"""${cout}_s AS (SELECT cell, list(s ORDER BY dim) AS c FROM (
-         |  SELECT cell, t.i AS dim, SUM(q[t.i]) / CAST(COUNT(*) AS DOUBLE) AS s
-         |  FROM $ain CROSS JOIN range(1, $Dim+1) t(i) GROUP BY cell, t.i)
-         | GROUP BY cell),
-         |$cout AS (SELECT $cin.cell, COALESCE(${cout}_s.c, $cin.c) AS c
-         |  FROM $cin LEFT JOIN ${cout}_s USING (cell))""".stripMargin
-    val rounds = (1 to CoarseRounds).map { r =>
-      val cin = if (r == 1) "cg0" else s"cg${r - 1}"
-      s"${assignCte(cin, s"ga$r")},\n${recenterCte(s"ga$r", cin, s"cg$r")}"
-    }.mkString(",\n")
-    val cR = s"cg$CoarseRounds"
-    s"""cg0 AS (SELECT CAST(vec_id AS BIGINT) AS cell, q AS c FROM (
-       |  SELECT vec_id, q, ROW_NUMBER() OVER (
-       |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS srn FROM qv)
-       |  WHERE srn <= $nlistSql),
-       |$rounds,
-       |${assignCte(cR, "gaf")},
+    val seed =
+      s"""SELECT CAST(vec_id AS BIGINT) AS cell, q AS c FROM (
+         |  SELECT vec_id, q, ROW_NUMBER() OVER (
+         |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS srn FROM qv)
+         |  WHERE srn <= $nlistSql""".stripMargin
+    val cR = KMeansOp.centsCte("g")
+    s"""${KMeansOp.lloydCtes("g", seed, "qv", Dim, "qv")},
        |gpr AS (SELECT qv.vec_id AS query_id, $cR.cell,
        |    ROW_NUMBER() OVER (PARTITION BY qv.vec_id ORDER BY
-       |      ${d2(cR)}, $cR.cell) AS cr
+       |      ${KMeansOp.dist2Sql(Dim, "qv.q", cR)}, $cR.cell) AS cr
        |  FROM qv CROSS JOIN $cR WHERE qv.vec_id < ${PqOp.NQ}),
        |gprobed AS (SELECT query_id, cell FROM gpr WHERE cr <= $NProbe)""".stripMargin
   }
@@ -382,7 +329,7 @@ object IvfPq {
     * cell), `adcr` ((query, cand) residual-ADC distances, candidates
     * joined through their own cell). */
   private def residualAdcCtes: String = {
-    val cR = s"cg$CoarseRounds"
+    val cR = KMeansOp.centsCte("g")
     s"""rqv AS MATERIALIZED (SELECT gaf.vec_id, gaf.cell AS gcell,
        |    list(floor(gaf.q[t.i] - cg.c[t.i]) ORDER BY t.i) AS q
        |  FROM gaf JOIN $cR cg ON cg.cell = gaf.cell

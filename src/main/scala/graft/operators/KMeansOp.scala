@@ -6,11 +6,13 @@ import graft.Tables
 import graft.functions.VectorOps.dot
 
 /** Deterministic distributed k-means (Lloyd's algorithm, fixed rounds) —
-  * the coarse quantizer that IVF ANN ([[Similarity.ivfTopK]]) and
-  * SemDeDup cells are built on, here as an oracle-gated operator in its
-  * own right: the full train loop (assign → recenter × [[Rounds]] →
-  * final assign) is value-checked against DuckDB running the same
-  * unrolled computation.
+  * the one trainer every k-means in graft runs: q63/q181/q191 clusters,
+  * the q65/q72/q157 IVF coarse quantizer, q104's SemDeDup cells, and
+  * the coarse and subspace quantizers of [[PqOp]] and [[IvfPq]]. The
+  * round ([[lloyd]]: assign → [[recenter]] × [[Rounds]]) and its DuckDB
+  * twin ([[lloydCtes]]) live here once; each caller owns only its seed
+  * rule, and the full train loop (final assign included) is
+  * value-checked against DuckDB running the same unrolled computation.
   *
   * Engine-exact by construction: vectors are quantized to INTEGRAL
   * doubles (round(x·10⁶) — float-origin values are exact in double, the
@@ -22,11 +24,11 @@ import graft.functions.VectorOps.dot
   * left-to-right fold, so the doubles agree bitwise all the way down.
   *
   * Scale notes: each round is ONE map-side-combined aggregate over the
-  * corpus (65 partial cells per partition: 64 sums + count) producing K
-  * rows collected to the driver; assignment is a narrow projection with
-  * the K×64 centroid matrix baked in as literals — no join, no shuffle
-  * of the corpus, the textbook Spark Lloyd layout. Empty cells keep
-  * their previous centroid.
+  * corpus (width + 1 partial cells per partition: the sums + count)
+  * producing K rows collected to the driver; assignment is a narrow
+  * projection with the K×width centroid matrix baked in as literals —
+  * no join, no shuffle of the corpus, the textbook Spark Lloyd layout.
+  * Empty cells keep their previous centroid; ties go to the lowest cell.
   */
 object KMeansOp {
 
@@ -111,19 +113,37 @@ object KMeansOp {
       .select(col("vec_id"),
         transform(col("embedding"), x => round(x.cast("double") * ScaleQ)).as("q"))
 
-  /** Squared-distance column to one centroid: qq − 2·q·c + cc. */
-  private[graft] def dist2(qq: Column, c: Seq[Double]): Column = {
+  /** Squared-distance column from vector column `q` (self-dot `qq`) to
+    * one centroid: qq − 2·q·c + cc. */
+  private def dist2(q: Column, qq: Column, c: Seq[Double]): Column = {
     val cLit = array(c.map(lit): _*)
     val cc = c.foldLeft(0.0)((acc, x) => acc + x * x) // same fold as list_reduce
-    qq - lit(2.0) * dot(col("q"), cLit) + lit(cc)
+    qq - lit(2.0) * dot(q, cLit) + lit(cc)
   }
 
-  /** Adds the argmin `cell` column for the given (cellId, centroid)
-    * pairs — the cell id is the seeding vector's ACTUAL vec_id (the
-    * oracle keys cells the same way), not its position in the collected
-    * array, so sparse/shifted vec_id spaces stay in sync. Ties → first
-    * position = lowest cell id (cents is vec_id-sorted), matching the
-    * oracle's ORDER BY dist2, cell. */
+  /** Squared distances from vector column `q` to every centroid, in
+    * `cents` order. */
+  private[graft] def dists(q: Column, cents: Seq[(Long, Seq[Double])]): Column = {
+    val qq = dot(q, q)
+    array(cents.map { case (_, c) => dist2(q, qq, c) }: _*)
+  }
+
+  /** The argmin cell of a [[dists]] array — the cell id is the seeding
+    * vector's ACTUAL vec_id (the oracle keys cells the same way), not
+    * its position in the collected array, so sparse/shifted vec_id
+    * spaces stay in sync. Ties → first position = lowest cell id (cents
+    * is vec_id-sorted), matching the oracle's ORDER BY dist2, cell. */
+  private[graft] def argminCell(ds: Column, cents: Seq[(Long, Seq[Double])]): Column = {
+    val ids = array(cents.map { case (id, _) => lit(id) }: _*)
+    element_at(ids, array_position(ds, array_min(ds)).cast("int"))
+  }
+
+  /** The argmin cell of vector column `q` among `cents`. */
+  private[graft] def cellCol(q: Column, cents: Seq[(Long, Seq[Double])]): Column =
+    argminCell(dists(q, cents), cents)
+
+  /** Adds the argmin `cell` column of `q` for the given (cellId,
+    * centroid) pairs. */
   private[graft] def assign(qv: DataFrame, cents: Seq[(Long, Seq[Double])]): DataFrame = {
     // zero centroids (empty corpus, or every vec_id ≥ k): there is no
     // cell to assign — a zero-element array(...) literal is NullType and
@@ -131,11 +151,7 @@ object KMeansOp {
     // that can't resolve
     if (cents.isEmpty)
       return qv.withColumn("cell", lit(null).cast("long"))
-    val qq = dot(col("q"), col("q"))
-    val dists = array(cents.map { case (_, c) => dist2(qq, c) }: _*)
-    val ids = array(cents.map { case (id, _) => lit(id) }: _*)
-    qv.withColumn("cell",
-      element_at(ids, array_position(dists, array_min(dists)).cast("int")))
+    qv.withColumn("cell", cellCol(col("q"), cents))
   }
 
   /** Above this K, [[assignAuto]] switches from the literal-matrix
@@ -188,30 +204,56 @@ object KMeansOp {
     if (cents.size <= LiteralAssignMaxK) assign(qv, cents)
     else assignBroadcast(qv, cents)
 
-  /** One Lloyd recenter: per-cell per-dimension means (exact sums of
-    * integral doubles), empty cells keep the old centroid. */
-  private def recenter(assigned: DataFrame,
-      old: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
-    val aggs = count(lit(1)).cast("double").as("n") +:
-      (1 to Dim).map(i => sum(element_at(col("q"), i)).as(s"s$i"))
-    val rows = assigned.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => r.getLong(0) ->
-        (r.getDouble(1), (1 to Dim).map(i => r.getDouble(1 + i))))
-      .toMap
+  /** (id, vector) pairs off the first two columns of `df`, collected —
+    * centroids, seeds and query vectors alike. */
+  private[graft] def collectCents(df: DataFrame): Seq[(Long, Seq[Double])] =
+    df.collect().map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+
+  /** Lloyd's centroid update: the mean (a cell's member count and
+    * per-dimension `sums`) where a cell has members; an empty cell
+    * keeps its old centroid. */
+  private[graft] def meanOrKeep(old: Seq[(Long, Seq[Double])],
+      sums: Long => Option[(Double, Seq[Double])]): Seq[(Long, Seq[Double])] =
     old.map { case (id, c) =>
-      rows.get(id) match {
-        case Some((n, sums)) => id -> sums.map(_ / n)
+      sums(id) match {
+        case Some((n, s)) => id -> s.map(_ / n)
         case None => id -> c
       }
     }
+
+  /** One Lloyd recenter over `assigned` (q, cell): per-cell
+    * per-dimension exact sums of integral doubles, as wide as the given
+    * centroids ([[Dim]] for a coarse quantizer, [[PqOp.SubDim]] per PQ
+    * subspace). */
+  private[graft] def recenter(assigned: DataFrame,
+      old: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
+    val width = old.head._2.size
+    val aggs = count(lit(1)).cast("double").as("n") +:
+      (1 to width).map(i => sum(element_at(col("q"), i)).as(s"s$i"))
+    val rows = assigned.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*)
+      .collect()
+      .map(r => r.getLong(0) ->
+        (r.getDouble(1), (1 to width).map(i => r.getDouble(1 + i))))
+      .toMap
+    meanOrKeep(old, rows.get)
   }
+
+  /** The Lloyd loop every trainer shares: [[Rounds]] rounds of
+    * assign + [[recenter]] over `train` (vec_id, q) from `seeds`. Zero
+    * seeds (empty corpus, or no row matches the seed rule) train
+    * nothing — a round would feed recenter an all-NULL cell grouping.
+    * Assignment picks the literal or broadcast kernel by cell count
+    * ([[assignAuto]]). */
+  private[graft] def lloyd(train: DataFrame,
+      seeds: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] =
+    if (seeds.isEmpty) seeds
+    else (1 to Rounds).foldLeft(seeds)((c, _) => recenter(assignAuto(train, c), c))
 
   /** q63: k-means train + final assignment — vec_id, cell, cell_size. */
   def kmeans(s: SparkSession, dir: String): DataFrame = kmeans(Tables.embeddings(s, dir))
 
   /** The deterministic train loop: seed with the first `k` vec_ids,
-    * [[Rounds]] Lloyd rounds. Returns (reusable quantized frame, final
+    * then [[lloyd]]. Returns (reusable quantized frame, final
     * (cellId, centroid) pairs) — shared by q63, the oracle-gated IVF
     * path, and trained-centroid SemDeDup (q104) so they can never drift
     * on seed/rounds/arithmetic. Assignment picks the literal or
@@ -221,7 +263,7 @@ object KMeansOp {
   private[graft] def trainCents(embeddings: DataFrame,
       k: Int = K): (DataFrame, Seq[(Long, Seq[Double])]) = {
     val qv = quantized(embeddings).localCheckpoint() // reused every round
-    (qv, trainCentsOn(qv, k))
+    (qv, lloyd(qv, collectCents(qv.filter(col("vec_id") < k).orderBy("vec_id"))))
   }
 
   /** [[trainCents]] with the cell count CORPUS-SCALED via
@@ -230,11 +272,11 @@ object KMeansOp {
     * cached-scan, and the oracle re-derives the identical k from the
     * identical COUNT(*) over its qv CTE. q63's CLUSTERING semantics
     * keep the fixed user-k [[trainCents]]. */
-  private[graft] def trainCentsScaled(embeddings: DataFrame,
-      minNList: Int = K): (DataFrame, Seq[(Long, Seq[Double])]) = {
+  private[graft] def trainCentsScaled(
+      embeddings: DataFrame): (DataFrame, Seq[(Long, Seq[Double])]) = {
     val qv = quantized(embeddings).localCheckpoint()
     val n = qv.count()
-    val k = scaledNList(n, minNList)
+    val k = scaledNList(n)
     val stride = trainStride(n, k)
     // md5-strided training sample (unbiased w.r.t. id layout); seeds =
     // the k lowest vec_ids IN THE SAMPLE (rank-based — `vec_id < k`
@@ -245,24 +287,7 @@ object KMeansOp {
       else qv.filter(
         TextAnalysis.md5Long(col("vec_id").cast("string")) % stride === 0L)
         .localCheckpoint()
-    var cents: Seq[(Long, Seq[Double])] = qvt.orderBy("vec_id").limit(k)
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
-    for (_ <- 1 to Rounds if cents.nonEmpty)
-      cents = recenter(assignAuto(qvt, cents), cents)
-    (qv, cents)
-  }
-
-  private def trainCentsOn(qv: DataFrame, k: Int): Seq[(Long, Seq[Double])] = {
-    var cents: Seq[(Long, Seq[Double])] = qv.filter(col("vec_id") < k)
-      .orderBy("vec_id").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
-    // zero seeds (empty corpus, or every vec_id >= k): there is nothing
-    // to train — running a round would feed recenter an all-NULL cell
-    // grouping and its collect would NPE on getLong
-    for (_ <- 1 to Rounds if cents.nonEmpty)
-      cents = recenter(assignAuto(qv, cents), cents)
-    cents
+    (qv, lloyd(qvt, collectCents(qvt.orderBy("vec_id").limit(k))))
   }
 
   def kmeans(embeddings: DataFrame): DataFrame = {
@@ -278,65 +303,76 @@ object KMeansOp {
       .orderBy("vec_id")
   }
 
-  /** q63 oracle: the same [[Rounds]]-round Lloyd loop unrolled as a CTE
-    * chain — quantize, assign (argmin via ROW_NUMBER), recenter
-    * (exact integral sums, empty cells keep the previous centroid via
-    * LEFT JOIN + COALESCE), final assign + sizes. */
-  private def lr(expr: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, $Dim+1), i -> $expr)), (x,y) -> x+y)"
+  // ------------------------------------------------------------------
+  // Oracle: the same loop unrolled as DuckDB CTEs — quantize, assign
+  // (argmin via ROW_NUMBER), recenter (exact integral sums, empty cells
+  // keep the previous centroid via LEFT JOIN + COALESCE), final assign.
 
-  /** WITH-body prefix replaying the train loop: `qv` (quantized vectors),
-    * `c0..c$Rounds` (centroids per round; `c$Rounds` is final), `af`
-    * (final assignment: vec_id, q, cell). Shared by the q63 oracle, the
-    * generated IVF oracle (q65), and the q104 trained-SemDeDup oracle. */
+  /** Σ over i = 1..`width` of `expr`, folded left from 0 — the fixed
+    * fold order of the Spark side's `dot`. */
+  private[graft] def lr(width: Int, expr: String): String =
+    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, $width+1), i -> $expr)), (x,y) -> x+y)"
+
+  /** Squared distance between list `q` and centroid table `cin`'s `c`,
+    * both `width` wide: qq − 2·q·c + cc, the Spark side's fold. */
+  def dist2Sql(width: Int, q: String, cin: String): String =
+    s"${lr(width, s"$q[i]*$q[i]")} - 2.0 * ${lr(width, s"$q[i]*$cin.c[i]")} + ${lr(width, s"$cin.c[i]*$cin.c[i]")}"
+
+  /** [[quantized]] as CTE `name`, its vectors restricted by `pred`. */
+  private def quantizedCte(name: String, pred: String = ""): String = {
+    val predSql = if (pred.isEmpty) "" else s" AND ($pred)"
+    s"""$name AS (SELECT vec_id,
+       |  list_transform(embedding, x -> round(CAST(x AS DOUBLE) * $ScaleQ)) AS q
+       | FROM embeddings WHERE embedding IS NOT NULL$predSql)""".stripMargin
+  }
+
+  /** CTE `aout`: each (vec_id, q) row of `src` with its argmin cell
+    * among centroid table `cin` — ties by lowest cell. */
+  private def assignCte(width: Int, cin: String, aout: String, src: String): String =
+    s"""$aout AS (SELECT vec_id, q, cell FROM (
+       |  SELECT qv.vec_id, qv.q, $cin.cell,
+       |    ROW_NUMBER() OVER (PARTITION BY qv.vec_id ORDER BY
+       |      ${dist2Sql(width, "qv.q", cin)}, $cin.cell) AS rn
+       |  FROM $src qv CROSS JOIN $cin) WHERE rn = 1)""".stripMargin
+
+  /** CTEs `${cout}_m` (per-cell means of assignment `ain`) and `cout`
+    * (the mean, or `cin`'s centroid for an empty cell). */
+  private def recenterCte(width: Int, ain: String, cin: String, cout: String): String =
+    s"""${cout}_m AS (SELECT cell, list(s ORDER BY dim) AS c FROM (
+       |  SELECT cell, t.i AS dim, SUM(q[t.i]) / CAST(COUNT(*) AS DOUBLE) AS s
+       |  FROM $ain CROSS JOIN range(1, $width+1) t(i) GROUP BY cell, t.i)
+       | GROUP BY cell),
+       |$cout AS (SELECT $cin.cell, COALESCE(${cout}_m.c, $cin.c) AS c
+       |  FROM $cin LEFT JOIN ${cout}_m USING (cell))""".stripMargin
+
+  /** Centroids after the last round of the chain stemmed `stem`. */
+  private[graft] def centsCte(stem: String): String = s"${stem}c$Rounds"
+
+  /** [[lloyd]]'s DuckDB twin: the seed CTE `${stem}c0` (`seed`: a
+    * SELECT of (cell, c)), [[Rounds]] assign/recenter rounds over
+    * `train` (`${stem}a<r>`, `${stem}c<r>`), and the final assignment
+    * `${stem}af` of `finalSrc` to [[centsCte]]. The stem keeps names
+    * unique where several chains share one WITH. */
+  private[graft] def lloydCtes(stem: String, seed: String, train: String, width: Int,
+      finalSrc: String): String = {
+    val rounds = (1 to Rounds).map { r =>
+      val (cin, cout) = (s"${stem}c${r - 1}", s"${stem}c$r")
+      s"${assignCte(width, cin, s"${stem}a$r", train)},\n${recenterCte(width, s"${stem}a$r", cin, cout)}"
+    }.mkString(",\n")
+    s"""${stem}c0 AS ($seed),
+       |$rounds,
+       |${assignCte(width, centsCte(stem), s"${stem}af", finalSrc)}""".stripMargin
+  }
+
+  /** WITH-body prefix replaying [[trainCents]]: `qv` (quantized
+    * vectors), `c0..c$Rounds` (centroids per round; `c$Rounds` is
+    * final), `af` (final assignment: vec_id, q, cell). Shared by the
+    * q63/q181/q191 oracles and the q104 trained-SemDeDup oracle. */
   def kmeansCtes: String = kmeansCtes(K)
 
-  def kmeansCtes(k: Int): String = kmeansCtes(k, "", includeAllAssign = false)
-
-  /** `basePred` restricts the TRAIN vectors (q157 trains on the base
-    * split only); `includeAllAssign` appends `qva` (every quantized
-    * vector, regardless of basePred) and `afa` (its assignment to the
-    * FINAL centroids) — the assign-without-retrain arm an index upsert
-    * replays. */
-  def kmeansCtes(k: Int, basePred: String, includeAllAssign: Boolean): String =
-    kmeansCtes(k.toString, basePred, includeAllAssign)
-
-  /** The `kSql` form takes the seed count as a SQL expression — the
-    * corpus-scaled index oracles pass [[scaledNListSql]] over a
-    * COUNT(*) scalar subquery so the replay derives the same k. */
-  def kmeansCtes(kSql: String, basePred: String, includeAllAssign: Boolean): String = {
-    def assignCte(cin: String, aout: String, src: String = "qv") =
-      s"""$aout AS (SELECT vec_id, q, cell FROM (
-         |  SELECT qv.vec_id, qv.q, $cin.cell,
-         |    ROW_NUMBER() OVER (PARTITION BY qv.vec_id ORDER BY
-         |      ${lr("qv.q[i]*qv.q[i]")} - 2.0 * ${lr("qv.q[i]*$cin.c[i]").replace("$cin", cin)} + ${lr("$cin.c[i]*$cin.c[i]").replace("$cin", cin)},
-         |      $cin.cell) AS rn
-         |  FROM $src qv CROSS JOIN $cin) WHERE rn = 1)""".stripMargin
-    def recenterCte(ain: String, cin: String, cout: String) =
-      s"""${cout}_m AS (SELECT cell, list(s ORDER BY dim) AS c FROM (
-         |  SELECT cell, t.i AS dim, SUM(q[t.i]) / CAST(COUNT(*) AS DOUBLE) AS s
-         |  FROM $ain CROSS JOIN range(1, $Dim+1) t(i) GROUP BY cell, t.i)
-         | GROUP BY cell),
-         |$cout AS (SELECT $cin.cell, COALESCE(${cout}_m.c, $cin.c) AS c
-         |  FROM $cin LEFT JOIN ${cout}_m USING (cell))""".stripMargin
-    val rounds = (1 to Rounds).map { r =>
-      val cin = if (r == 1) "c0" else s"c${r - 1}"
-      s"${assignCte(cin, s"a$r")},\n${recenterCte(s"a$r", cin, s"c$r")}"
-    }.mkString(",\n")
-    val basePredSql = if (basePred.isEmpty) "" else s" AND ($basePred)"
-    val allAssign =
-      if (!includeAllAssign) ""
-      else s""",
-        |qva AS (SELECT vec_id,
-        |  list_transform(embedding, x -> round(CAST(x AS DOUBLE) * $ScaleQ)) AS q
-        | FROM embeddings WHERE embedding IS NOT NULL),
-        |${assignCte(s"c$Rounds", "afa", "qva")}""".stripMargin
-    s"""qv AS (SELECT vec_id,
-       |  list_transform(embedding, x -> round(CAST(x AS DOUBLE) * $ScaleQ)) AS q
-       | FROM embeddings WHERE embedding IS NOT NULL$basePredSql),
-       |c0 AS (SELECT CAST(vec_id AS BIGINT) AS cell, q AS c FROM qv WHERE vec_id < ($kSql)),
-       |$rounds,
-       |${assignCte(s"c$Rounds", "af")}$allAssign""".stripMargin
+  def kmeansCtes(k: Int): String = {
+    val seed = s"SELECT CAST(vec_id AS BIGINT) AS cell, q AS c FROM qv WHERE vec_id < ($k)"
+    s"${quantizedCte("qv")},\n${lloydCtes("", seed, "qv", Dim, "qv")}"
   }
 
   /** CTE chain for the CORPUS-SCALED, SAMPLE-TRAINED quantizer
@@ -344,55 +380,27 @@ object KMeansOp {
     * under `basePred`), `qvt` (the md5-strided training sample), `c0`
     * (rank-based seeds — the k lowest vec_ids IN the sample), Lloyd
     * rounds over `qvt`, and the final assignment `af` over the FULL
-    * `qv` (plus `qva`/`afa` when `includeAllAssign`). k and the stride
-    * are both re-derived from the same COUNT(*) the Spark side uses. */
-  def kmeansScaledCtes(minNList: Int, basePred: String,
-      includeAllAssign: Boolean): String = {
-    def assignCte(cin: String, aout: String, src: String) =
-      s"""$aout AS (SELECT vec_id, q, cell FROM (
-         |  SELECT qv.vec_id, qv.q, $cin.cell,
-         |    ROW_NUMBER() OVER (PARTITION BY qv.vec_id ORDER BY
-         |      ${lr("qv.q[i]*qv.q[i]")} - 2.0 * ${lr("qv.q[i]*$cin.c[i]").replace("$cin", cin)} + ${lr("$cin.c[i]*$cin.c[i]").replace("$cin", cin)},
-         |      $cin.cell) AS rn
-         |  FROM $src qv CROSS JOIN $cin) WHERE rn = 1)""".stripMargin
-    def recenterCte(ain: String, cin: String, cout: String) =
-      s"""${cout}_m AS (SELECT cell, list(s ORDER BY dim) AS c FROM (
-         |  SELECT cell, t.i AS dim, SUM(q[t.i]) / CAST(COUNT(*) AS DOUBLE) AS s
-         |  FROM $ain CROSS JOIN range(1, $Dim+1) t(i) GROUP BY cell, t.i)
-         | GROUP BY cell),
-         |$cout AS (SELECT $cin.cell, COALESCE(${cout}_m.c, $cin.c) AS c
-         |  FROM $cin LEFT JOIN ${cout}_m USING (cell))""".stripMargin
-    val kSql = scaledNListSql("(SELECT COUNT(*) FROM qv)", minNList)
+    * `qv`. `includeAllAssign` appends `qva` (every quantized vector,
+    * regardless of basePred) and `afa` (its assignment to the final
+    * centroids) — the assign-without-retrain arm an index upsert
+    * replays. k and the stride are both re-derived from the same
+    * COUNT(*) the Spark side uses. */
+  def kmeansScaledCtes(basePred: String, includeAllAssign: Boolean): String = {
+    val kSql = scaledNListSql("(SELECT COUNT(*) FROM qv)")
     val sSql = trainStrideSql("(SELECT COUNT(*) FROM qv)", kSql)
-    val rounds = (1 to Rounds).map { r =>
-      val cin = if (r == 1) "c0" else s"c${r - 1}"
-      s"${assignCte(cin, s"a$r", "qvt")},\n${recenterCte(s"a$r", cin, s"c$r")}"
-    }.mkString(",\n")
-    val basePredSql = if (basePred.isEmpty) "" else s" AND ($basePred)"
+    val seed =
+      s"""SELECT CAST(vec_id AS BIGINT) AS cell, q AS c FROM (
+         |  SELECT vec_id, q, ROW_NUMBER() OVER (ORDER BY vec_id) AS srn FROM qvt)
+         |  WHERE srn <= ($kSql)""".stripMargin
     val allAssign =
       if (!includeAllAssign) ""
-      else s""",
-        |qva AS (SELECT vec_id,
-        |  list_transform(embedding, x -> round(CAST(x AS DOUBLE) * $ScaleQ)) AS q
-        | FROM embeddings WHERE embedding IS NOT NULL),
-        |${assignCte(s"c$Rounds", "afa", "qva")}""".stripMargin
-    s"""qv AS (SELECT vec_id,
-       |  list_transform(embedding, x -> round(CAST(x AS DOUBLE) * $ScaleQ)) AS q
-       | FROM embeddings WHERE embedding IS NOT NULL$basePredSql),
+      else s",\n${quantizedCte("qva")},\n${assignCte(Dim, centsCte(""), "afa", "qva")}"
+    s"""${quantizedCte("qv", basePred)},
        |qvt AS (SELECT vec_id, q FROM qv
        |  WHERE CAST(('0x' || substring(md5(CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT)
        |    % ($sSql) = 0),
-       |c0 AS (SELECT CAST(vec_id AS BIGINT) AS cell, q AS c FROM (
-       |  SELECT vec_id, q, ROW_NUMBER() OVER (ORDER BY vec_id) AS srn FROM qvt)
-       |  WHERE srn <= ($kSql)),
-       |$rounds,
-       |${assignCte(s"c$Rounds", "af", "qv")}$allAssign""".stripMargin
+       |${lloydCtes("", seed, "qvt", Dim, "qv")}$allAssign""".stripMargin
   }
-
-  /** DuckDB expression for the squared distance between `qv.q` and a
-    * centroid column `$cin.c` — same fixed fold as the Spark side. */
-  def dist2Sql(cin: String): String =
-    s"${lr("qv.q[i]*qv.q[i]")} - 2.0 * ${lr("qv.q[i]*$cin.c[i]").replace("$cin", cin)} + ${lr("$cin.c[i]*$cin.c[i]").replace("$cin", cin)}"
 
   def kmeansOracleSql: String =
     s"""WITH $kmeansCtes,
@@ -437,13 +445,10 @@ object KMeansOp {
       return qv.select(lit(0L).as("cell"), lit(0L).as("n"),
         lit(0.0).as("mean_sil_r"), lit(0L).as("min_mic"),
         lit(0L).as("max_mic")).limit(0)
-    val qq = dot(col("q"), col("q"))
-    val dists = array(cents.map { case (_, c) => dist2(qq, c) }: _*)
-    val ids = array(cents.map { case (id, _) => lit(id) }: _*)
+    val ds = dists(col("q"), cents)
     qv
-      .withColumn("cell",
-        element_at(ids, array_position(dists, array_min(dists)).cast("int")))
-      .withColumn("ds", array_sort(dists))
+      .withColumn("cell", argminCell(ds, cents))
+      .withColumn("ds", array_sort(ds))
       .withColumn("a2", element_at(col("ds"), 1))
       .withColumn("b2", element_at(col("ds"), 2))
       .withColumn("sil",
@@ -466,7 +471,7 @@ object KMeansOp {
     * rn=1/rn=2 window rows, the identical s/micro arithmetic. */
   def silhouetteOracleSql: String =
     s"""WITH $kmeansCtes,
-       |dd AS (SELECT qv.vec_id, c$Rounds.cell, ${dist2Sql(s"c$Rounds")} AS d2
+       |dd AS (SELECT qv.vec_id, c$Rounds.cell, ${dist2Sql(Dim, "qv.q", s"c$Rounds")} AS d2
        |  FROM qv CROSS JOIN c$Rounds),
        |rk AS (SELECT vec_id, cell, d2,
        |    ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.VectorOps.{cosinePre, dot}
+import graft.functions.VectorOps.cosinePre
 
 /** Product quantization (Jégou et al. 2011, "Product Quantization for
   * Nearest Neighbor Search") — the vector-compression half of the
@@ -53,7 +53,6 @@ object PqOp {
   val M = 8
   val SubDim = 8 // M * SubDim = KMeansOp.Dim
   val Ks = 16
-  val Rounds = 2
   val NQ = 8
   val TopK = 5
   // Serving shortlists run 10-100× the final k (FAISS's reorder_k):
@@ -67,65 +66,29 @@ object PqOp {
   private def subSlice(q: Column, m: Int): Column =
     slice(q, m * SubDim + 1, SubDim)
 
-  /** Per-subspace Lloyd recenter — [[KMeansOp.recenter]] at SubDim. */
-  private def recenterSub(assigned: DataFrame,
-      old: Seq[(Long, Seq[Double])]): Seq[(Long, Seq[Double])] = {
-    val aggs = count(lit(1)).cast("double").as("n") +:
-      (1 to SubDim).map(i => sum(element_at(col("q"), i)).as(s"s$i"))
-    val rows = assigned.groupBy(col("cell")).agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map(r => r.getLong(0) ->
-        (r.getDouble(1), (1 to SubDim).map(i => r.getDouble(1 + i))))
-      .toMap
-    old.map { case (id, c) =>
-      rows.get(id) match {
-        case Some((n, sums)) => id -> sums.map(_ / n)
-        case None => id -> c
-      }
-    }
-  }
-
   /** Train subspace `m`'s codebook: seed = first [[Ks]] vec_ids'
-    * subvectors, [[Rounds]] Lloyd rounds ([[KMeansOp]] conventions —
-    * the collects are Ks rows of SubDim doubles, bounded). */
+    * subvectors, then [[KMeansOp.lloyd]] (the collects are Ks rows of
+    * SubDim doubles, bounded). The reference semantics [[trainSubs]] is
+    * checked against. */
   private[graft] def trainSub(qv: DataFrame, m: Int): Seq[(Long, Seq[Double])] = {
     val sub = qv.select(col("vec_id"), subSlice(col("q"), m).as("q"))
-    var cents: Seq[(Long, Seq[Double])] = sub.filter(col("vec_id") < Ks)
-      .orderBy("vec_id").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
-    for (_ <- 1 to Rounds if cents.nonEmpty)
-      cents = recenterSub(KMeansOp.assign(sub, cents), cents)
-    cents
-  }
-
-  /** Argmin cell for a sub-slice column against one codebook — the
-    * exact [[KMeansOp.assign]]/[[KMeansOp.dist2]] expressions applied to
-    * the slice (same dot fold, same cc fold, same lowest-cell
-    * tie-break), so assignments match the per-subspace path bitwise. */
-  private def cellCol(sub: Column, cents: Seq[(Long, Seq[Double])]): Column = {
-    val qq = dot(sub, sub)
-    val dists = array(cents.map { case (_, c) =>
-      val cLit = array(c.map(lit): _*)
-      val cc = c.foldLeft(0.0)((acc, x) => acc + x * x)
-      qq - lit(2.0) * dot(sub, cLit) + lit(cc)
-    }: _*)
-    val ids = array(cents.map { case (id, _) => lit(id) }: _*)
-    element_at(ids, array_position(dists, array_min(dists)).cast("int"))
+    KMeansOp.lloyd(sub,
+      KMeansOp.collectCents(sub.filter(col("vec_id") < Ks).orderBy("vec_id")))
   }
 
   /** All [[M]] subspace codebooks in one fused pass per round. The
     * per-subspace loop ([[trainSub]] × M) paid M seed collects plus
-    * M·[[Rounds]] assign+recenter round-trips over the same checkpointed
-    * frame (24 driver jobs per build at M=8, Rounds=2); this trains all
-    * eight from ONE seed collect (sliced driver-side) and ONE exploded
-    * (m, cell) map-combined aggregate per round. The recenter sums are
-    * the identical exact integral-double sums per (m, cell), so the
-    * books are bit-identical to the per-subspace path (spec-checked);
-    * [[trainSub]] stays as the reference semantics. */
+    * M·[[KMeansOp.Rounds]] assign+recenter round-trips over the same
+    * checkpointed frame (24 driver jobs per build at M=8, Rounds=2);
+    * this trains all eight from ONE seed collect (sliced driver-side)
+    * and ONE exploded (m, cell) map-combined aggregate per round. The
+    * recenter sums are the identical exact integral-double sums per
+    * (m, cell), so the books are bit-identical to the per-subspace
+    * path (spec-checked), and each book's update is
+    * [[KMeansOp.meanOrKeep]]. */
   private[graft] def trainSubs(qv: DataFrame): Seq[Seq[(Long, Seq[Double])]] = {
-    val seeds = qv.filter(col("vec_id") < Ks).orderBy("vec_id")
-      .select(col("vec_id"), col("q")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+    val seeds = KMeansOp.collectCents(qv.filter(col("vec_id") < Ks).orderBy("vec_id")
+      .select(col("vec_id"), col("q")))
     var books: Seq[Seq[(Long, Seq[Double])]] = (0 until M).map { m =>
       seeds.map { case (id, q) => id -> q.slice(m * SubDim, (m + 1) * SubDim) }
     }
@@ -138,10 +101,10 @@ object PqOp {
     val sliced = qv.select(col("vec_id") +:
       (0 until M).map(m => subSlice(col("q"), m).as(s"q$m")): _*)
       .localCheckpoint()
-    for (_ <- 1 to Rounds) {
+    for (_ <- 1 to KMeansOp.Rounds) {
       val entries = (0 until M).map { m =>
         val sub = col(s"q$m")
-        struct(lit(m).as("m") +: cellCol(sub, books(m)).as("cell") +:
+        struct(lit(m).as("m") +: KMeansOp.cellCol(sub, books(m)).as("cell") +:
           (1 to SubDim).map(i => element_at(sub, i).as(s"x$i")): _*)
       }
       val sums = (1 to SubDim).map(i => sum(col(s"e.x$i")).as(s"s$i"))
@@ -153,12 +116,7 @@ object PqOp {
           (r.getDouble(2), (0 until SubDim).map(i => r.getDouble(3 + i))))
         .toMap
       books = books.zipWithIndex.map { case (b, m) =>
-        b.map { case (id, c) =>
-          rows.get((m, id)) match {
-            case Some((n, s)) => id -> s.map(_ / n)
-            case None => id -> c
-          }
-        }
+        KMeansOp.meanOrKeep(b, id => rows.get((m, id)))
       }
     }
     books
@@ -246,9 +204,7 @@ object PqOp {
   private def adcScored(embeddings: DataFrame): Option[DataFrame] = {
     val qv = unitQuantized(embeddings).localCheckpoint()
     val books = trainSubs(qv)
-    val queries: Seq[(Long, Seq[Double])] =
-      qv.filter(col("vec_id") < NQ).orderBy("vec_id").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+    val queries = KMeansOp.collectCents(qv.filter(col("vec_id") < NQ).orderBy("vec_id"))
     if (books.exists(_.isEmpty) || queries.isEmpty) None
     else Some(scoreEncoded(encode(qv, books), queries, books))
   }
@@ -307,15 +263,14 @@ object PqOp {
     val em = Tables.embeddings(s, dir)
     val path = graft.ArtifactStore.ensureCurrent(s, s"pq_$LayoutVersion",
       Tables.dirFingerprint(s, dir,
-        s"pq;m=$M;ks=$Ks;r=$Rounds;scale=${KMeansOp.ScaleQ};${em.schema.catalogString}")) {
+        s"pq;m=$M;ks=$Ks;r=${KMeansOp.Rounds};scale=${KMeansOp.ScaleQ};${em.schema.catalogString}")) {
       staging => buildPq(em, staging)
     }
     val books = loadBooks(s, path)
     // quantizing the NQ query vectors is per-row work on a pushed-down
     // vec_id < NQ scan — not training
-    val queries: Seq[(Long, Seq[Double])] =
-      unitQuantized(em).filter(col("vec_id") < NQ).orderBy("vec_id").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq).toSeq
+    val queries = KMeansOp.collectCents(
+      unitQuantized(em).filter(col("vec_id") < NQ).orderBy("vec_id"))
     if (books.exists(_.isEmpty) || queries.isEmpty) None
     else Some(scoreEncoded(
       graft.ArtifactStore.readTable(s, s"$path/codes.parquet"), queries, books))
@@ -417,42 +372,17 @@ object PqOp {
   // ------------------------------------------------------------------
   // Oracle: the identical chain unrolled as DuckDB CTEs.
 
-  private[graft] def lr(dim: Int, expr: String): String =
-    s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, $dim+1), i -> $expr)), (x,y) -> x+y)"
-
-  /** Subspace dist2 between sub-table alias `qv`'s 16-dim q and
-    * centroid table `cin`'s c — [[KMeansOp.dist2Sql]] at SubDim. */
-  private def dist2Sub(cin: String): String =
-    s"${lr(SubDim, "qv.q[i]*qv.q[i]")} - 2.0 * ${lr(SubDim, s"qv.q[i]*$cin.c[i]")} + ${lr(SubDim, s"$cin.c[i]*$cin.c[i]")}"
-
-  /** Per-subspace Lloyd chain (qv_m / c0_m / a{r}_m / c{r}_m), the
-    * [[KMeansOp.kmeansCtes]] shape parameterized to a vector slice.
-    * `src` is the (vec_id, q) table the chain trains/encodes over —
-    * "qv" for q111's raw vectors, "rqv" for IVF-PQ's coarse residuals. */
+  /** Per-subspace Lloyd chain: `qv_m<m>` (the subspace slice of `src`)
+    * and [[KMeansOp.lloydCtes]] stemmed `s<m>`, seeded with the first
+    * [[Ks]] vec_ids — its final assignment `s<m>af` is the subspace's
+    * code. `src` is the (vec_id, q) table the chain trains/encodes over
+    * — "qv" for q111's raw vectors, "rqv" for IVF-PQ's coarse
+    * residuals. */
   private[graft] def subspaceCtes(m: Int, src: String = "qv"): String = {
-    val lo = m * SubDim + 1
-    val hi = (m + 1) * SubDim
-    def assignCte(cin: String, aout: String) =
-      s"""$aout AS (SELECT vec_id, q, cell FROM (
-         |  SELECT qv.vec_id, qv.q, $cin.cell,
-         |    ROW_NUMBER() OVER (PARTITION BY qv.vec_id ORDER BY
-         |      ${dist2Sub(cin)}, $cin.cell) AS rn
-         |  FROM qv_m$m qv CROSS JOIN $cin) WHERE rn = 1)""".stripMargin
-    def recenterCte(ain: String, cin: String, cout: String) =
-      s"""${cout}_s AS (SELECT cell, list(s ORDER BY dim) AS c FROM (
-         |  SELECT cell, t.i AS dim, SUM(q[t.i]) / CAST(COUNT(*) AS DOUBLE) AS s
-         |  FROM $ain CROSS JOIN range(1, $SubDim+1) t(i) GROUP BY cell, t.i)
-         | GROUP BY cell),
-         |$cout AS (SELECT $cin.cell, COALESCE(${cout}_s.c, $cin.c) AS c
-         |  FROM $cin LEFT JOIN ${cout}_s USING (cell))""".stripMargin
-    val rounds = (1 to Rounds).map { r =>
-      val cin = if (r == 1) s"c0_m$m" else s"c${r - 1}_m$m"
-      s"${assignCte(cin, s"a${r}_m$m")},\n${recenterCte(s"a${r}_m$m", cin, s"c${r}_m$m")}"
-    }.mkString(",\n")
-    s"""qv_m$m AS (SELECT vec_id, q[$lo:$hi] AS q FROM $src),
-       |c0_m$m AS (SELECT CAST(vec_id AS BIGINT) AS cell, q AS c FROM qv_m$m WHERE vec_id < $Ks),
-       |$rounds,
-       |${assignCte(s"c${Rounds}_m$m", s"enc_m$m")}""".stripMargin
+    val sub = s"qv_m$m"
+    val seed = s"SELECT CAST(vec_id AS BIGINT) AS cell, q AS c FROM $sub WHERE vec_id < $Ks"
+    s"""$sub AS (SELECT vec_id, q[${m * SubDim + 1}:${(m + 1) * SubDim}] AS q FROM $src),
+       |${KMeansOp.lloydCtes(s"s$m", seed, sub, SubDim, sub)}""".stripMargin
   }
 
   /** The unit-quantization CTE (`qv`) — [[unitQuantized]] replayed. */
@@ -471,7 +401,7 @@ object PqOp {
   private[graft] def pqChainCtes(src: String): String = {
     val subs = (0 until M).map(m => subspaceCtes(m, src)).mkString(",\n")
     val encFrom = (0 until M).map(m =>
-      if (m == 0) s"enc_m$m e$m" else s"JOIN enc_m$m e$m USING (vec_id)").mkString(" ")
+      if (m == 0) s"s${m}af e$m" else s"JOIN s${m}af e$m USING (vec_id)").mkString(" ")
     val codeCols = (0 until M).map(m => s"e$m.cell AS code$m").mkString(", ")
     s"""$subs,
        |enc AS (SELECT e0.vec_id, $codeCols FROM $encFrom)""".stripMargin
@@ -479,7 +409,7 @@ object PqOp {
 
   /** The M codebook joins resolving a candidate's codes to centroids. */
   private[graft] def cfJoinsSql: String = (0 until M).map(m =>
-    s"JOIN c${Rounds}_m$m cf$m ON cf$m.cell = enc.code$m").mkString(" ")
+    s"JOIN ${KMeansOp.centsCte(s"s$m")} cf$m ON cf$m.cell = enc.code$m").mkString(" ")
 
   /** Per-subspace ADC terms: exact dist2 between the query vector
     * `qref` (a full-Dim list column reference, e.g. "qs.q") sliced at
@@ -488,7 +418,8 @@ object PqOp {
   private[graft] def adcTermsSql(qref: String): String =
     (0 until M).map { m =>
       val off = m * SubDim
-      s"${lr(SubDim, s"$qref[$off+i]*$qref[$off+i]")} - 2.0 * ${lr(SubDim, s"$qref[$off+i]*cf$m.c[i]")} + ${lr(SubDim, s"cf$m.c[i]*cf$m.c[i]")}"
+      val lr = KMeansOp.lr(SubDim, _: String)
+      s"${lr(s"$qref[$off+i]*$qref[$off+i]")} - 2.0 * ${lr(s"$qref[$off+i]*cf$m.c[i]")} + ${lr(s"cf$m.c[i]*cf$m.c[i]")}"
     }.map(t => s"($t)").mkString(" + ")
 
   /** WITH-body: quantize, M subspace chains, `enc` (vec_id + codes),

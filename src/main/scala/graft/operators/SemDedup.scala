@@ -18,9 +18,9 @@ import graft.functions.VectorOps._
   * codegen'd projection over the corpus — no join, no shuffle. The
   * pair stage shuffles once on cluster_id and does pairwise work only
   * inside a cell; with K sized so cells are ~√n the total pair volume
-  * is n·(n/K), the SemDeDup contract. At 100 TB you raise K (real
-  * k-means centroids, see [[Similarity.ivfTopK]]'s seeded k-means) so
-  * cells stay bounded; the assignment stage is unchanged.
+  * is n·(n/K), the SemDeDup contract. At 100 TB you raise K on trained
+  * k-means centroids ([[semDedupTrained]], q104) so cells stay bounded;
+  * the assignment stage is unchanged.
   */
 object SemDedup {
 
@@ -170,8 +170,7 @@ object SemDedup {
     * with cosines over the quantized `q` vectors — exactly the Spark
     * side's arithmetic. */
   def semDedupTrainedOracleSql: String = {
-    def lr(expr: String): String =
-      s"list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(range(1, 65), i -> $expr)), (x,y) -> x+y)"
+    val lr = KMeansOp.lr(KMeansOp.Dim, _: String)
     s"""WITH ${KMeansOp.kmeansCtes(TrainedK)},
        |m AS (SELECT vec_id, CAST(cell AS BIGINT) AS cluster_id, q AS e,
        |  sqrt(${lr("q[i]*q[i]")}) AS nrm FROM af),

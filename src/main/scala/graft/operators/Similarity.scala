@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.Tables
 import graft.functions.VectorOps._
 
@@ -13,10 +12,10 @@ import graft.functions.VectorOps._
   * broadcasts the (small) query side against the full corpus, and top-k
   * runs as a bounded-heap aggregate (map-side partial, ≤ k rows per
   * partition per query into the shuffle). With thousands of queries you
-  * flip to [[lshBucket]]-blocked scoring (q28) or [[ivfTopK]] so each
-  * query only scores its candidate cells. The k-NN self-join is the
-  * O(n²) exact variant kept for oracle parity; its scale path is the
-  * same blocking.
+  * flip to [[lshBucket]]-blocked scoring (q28) or the IVF index
+  * ([[ivfTopKExact]], q65/q72) so each query only scores its candidate
+  * cells. The k-NN self-join is the O(n²) exact variant kept for oracle
+  * parity; its scale path is the same blocking (q41).
   */
 object Similarity {
 
@@ -589,74 +588,17 @@ object Similarity {
        |ORDER BY tq.query_id""".stripMargin
   }
 
-  /** IVF (inverted-file) top-k: k-means coarse quantizer over the
-    * corpus, queries probe their `nprobe` nearest cells and score only
-    * those candidates. The standard billion-scale ANN layout: at 100 TB
-    * the centroids (nlist × dim) broadcast everywhere, the corpus is
-    * partitioned by cell, and each query touches nprobe/nlist of the
-    * data. Not SQL-expressible (k-means), so spec-checked against
-    * brute-force recall rather than the DuckDB oracle. */
-  def ivfTopK(s: SparkSession, dir: String, nlist: Int = 16, nprobe: Int = 4,
-      k: Int = 10): DataFrame =
-    ivfTopK(graft.Tables.embeddings(s, dir), nlist, nprobe, k)
-
-  /** Shared IVF plumbing: k-means coarse quantizer → (assigned corpus
-    * with its `cell`, tiny (cell, center) frame). Single definition so
-    * the inline ivfTopK, the cell-blocked kNN join, and the persisted
-    * [[IvfIndex]] can never drift apart on seed/assignment/centroids. */
-  private[operators] def kmeansCells(embeddings: DataFrame, nlist: Int,
-      seed: Long = 42L): (DataFrame, DataFrame) = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val v = Dedup.normalized(embeddings).withColumn("features", array_to_vector(col("e")))
-    val model = new KMeans().setK(nlist).setSeed(seed).setFeaturesCol("features")
-      .setPredictionCol("cell").fit(v)
-    val assigned = model.transform(v).select(
-      col("vec_id"), col("e"), col("nrm"), col("cell"))
-    val centers = embeddings.sparkSession.createDataFrame(
-      model.clusterCenters.toIndexedSeq.zipWithIndex.map { case (c, i) => (i, c.toArray) })
-      .toDF("cell", "center")
-    (assigned, centers)
-  }
-
-  /** Shared IVF probe: rank cells per query by squared distance to the
-    * broadcast centroids, keep the nprobe nearest → (query_id, eq, nq,
-    * cell) rows ready for the cell equi-join. */
-  private[operators] def probeCells(q: DataFrame, centers: DataFrame,
-      nprobe: Int): DataFrame = {
-    val wCell = Window.partitionBy(col("query_id")).orderBy(col("dist2"), col("cell"))
-    q.crossJoin(broadcast(centers))
-      .withColumn("dist2",
-        col("nq") * col("nq") - lit(2.0) * dot(col("eq"), col("center"))
-          + dot(col("center"), col("center")))
-      .withColumn("cell_rank", row_number().over(wCell))
-      .filter(col("cell_rank") <= nprobe)
-      .select("query_id", "eq", "nq", "cell")
-  }
-
-  def ivfTopK(embeddings: DataFrame, nlist: Int, nprobe: Int, k: Int): DataFrame = {
-    val (assignedRaw, centers) = kmeansCells(embeddings, nlist)
-    val assigned = assignedRaw.select(col("vec_id").as("__cand_id"),
-      col("e").as("ec"), col("nrm").as("nc"), col("cell"))
-    val q = Dedup.normalized(embeddings).filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("e").as("eq"), col("nrm").as("nq"))
-    val scored = probeCells(q, centers, nprobe).join(assigned, Seq("cell"))
-      .filter(col("query_id") =!= col("__cand_id"))
-      .select(col("query_id"), col("__cand_id"),
-        cosinePre(col("eq"), col("ec"), col("nq"), col("nc")).as("sim"))
-    explodeTopK(scored, "query_id", "neighbor_id", k)
-      .orderBy("query_id", "rank")
-  }
-
-  /** q65: oracle-gated IVF top-k — the [[ivfTopK]] layout with the
-    * coarse quantizer swapped for [[KMeansOp]]'s deterministic Lloyd
+  /** q65: oracle-gated IVF (inverted-file) top-k — the billion-scale
+    * ANN layout: a k-means coarse quantizer over the corpus, queries
+    * probe their `nprobe` nearest cells and score only those
+    * candidates. The quantizer is [[KMeansOp]]'s deterministic Lloyd
     * trainer, which makes the ENTIRE index + search path reproducible in
     * another engine: quantized integral-double vectors give exact
     * centroid arithmetic, probe ranking is an exact dist2 sort, and the
-    * final cosine scoring matches the q27/q28 fold bit-for-bit. Same
-    * scale shape as ivfTopK: centroids broadcast as literals (no join,
-    * no corpus shuffle for assignment), each query scores only its
-    * nprobe cells' candidates. */
+    * final cosine scoring matches the q27/q28 fold bit-for-bit.
+    * Centroids ride as literals (no join, no corpus shuffle for
+    * assignment); [[IvfIndex]] (q72) is the persisted, cell-partitioned
+    * layout of the same pipeline. */
   def ivfTopKExact(s: SparkSession, dir: String): DataFrame =
     ivfTopKExact(graft.Tables.embeddings(s, dir))
 
@@ -689,9 +631,7 @@ object Similarity {
     // qq − 2·qc + cc left-fold as KMeansOp.dist2 and the oracle's
     // list_reduce chain, so ranks (ties by lowest cell) agree exactly.
     val spark = qv.sparkSession
-    val qrows: Seq[(Long, Seq[Double])] = qv.select(col("vec_id"), col("q"))
-      .collect().toSeq
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).toSeq)
+    val qrows = KMeansOp.collectCents(qv.select(col("vec_id"), col("q")))
     val probePairs: Seq[(Long, Long)] = qrows.flatMap { case (qid, q) =>
       cents.map { case (cell, c) => (PqOp.lutDist(q, c), cell) }
         .sortBy { case (d, cell) => (d, cell) }
@@ -721,23 +661,34 @@ object Similarity {
   /** Generated DuckDB oracle for q65: replays the deterministic k-means
     * train (shared CTE chain with the q63 oracle), the nprobe cell
     * ranking, and the cosine scoring — candidates live in exactly one
-    * cell and probe cells are distinct, so no DISTINCT is needed. */
-  def ivfExactOracleSql(nprobe: Int = 3, k: Int = 10): String = {
-    val cR = s"c${KMeansOp.Rounds}"
-    // corpus-scaled nlist + md5-strided training sample, both
-    // re-derived from the SAME count the Spark side uses
-    s"""WITH ${KMeansOp.kmeansScaledCtes(KMeansOp.K, "", includeAllAssign = false)},
-       |n AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
+    * cell and probe cells are distinct, so no DISTINCT is needed. The
+    * corpus-scaled nlist and the md5-strided training sample are both
+    * re-derived from the SAME count the Spark side uses. */
+  def ivfExactOracleSql(nprobe: Int = 3, k: Int = 10): String =
+    s"""WITH ${KMeansOp.kmeansScaledCtes("", includeAllAssign = false)},
+       |${ivfProbeScoreOracleSql("qv", "af", nprobe, k)}""".stripMargin
+
+  /** [[ivfProbeScore]]'s oracle tail over a trained
+    * [[KMeansOp.kmeansScaledCtes]] chain: `n` (normalized vectors),
+    * `pr`/`probed` (each query's `nprobe` nearest cells by exact dist2,
+    * ties by cell), `cand` (the assigned corpus), `p`/`r` (cosine-scored
+    * candidates ranked per query) and the top-`k` SELECT. `querySrc`
+    * holds the quantized queries, `assigned` the corpus's final cell
+    * assignment. */
+  private[operators] def ivfProbeScoreOracleSql(querySrc: String, assigned: String,
+      nprobe: Int, k: Int): String = {
+    val cR = KMeansOp.centsCte("")
+    s"""n AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
        |  sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
        |    list_transform(range(1, len(embedding)+1),
        |      i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE))), (x,y) -> x+y)) AS nrm
        |  FROM embeddings WHERE embedding IS NOT NULL),
        |pr AS (SELECT qv.vec_id AS query_id, $cR.cell,
        |    ROW_NUMBER() OVER (PARTITION BY qv.vec_id ORDER BY
-       |      ${KMeansOp.dist2Sql(cR)}, $cR.cell) AS cell_rank
-       |  FROM qv CROSS JOIN $cR WHERE qv.vec_id < 10),
+       |      ${KMeansOp.dist2Sql(KMeansOp.Dim, "qv.q", cR)}, $cR.cell) AS cell_rank
+       |  FROM $querySrc qv CROSS JOIN $cR WHERE qv.vec_id < 10),
        |probed AS (SELECT query_id, cell FROM pr WHERE cell_rank <= $nprobe),
-       |cand AS (SELECT af.vec_id, af.cell, n.e, n.nrm FROM af JOIN n USING (vec_id)),
+       |cand AS (SELECT $assigned.vec_id, $assigned.cell, n.e, n.nrm FROM $assigned JOIN n USING (vec_id)),
        |p AS (SELECT probed.query_id, cand.vec_id AS neighbor_id,
        |  list_reduce(list_prepend(CAST(0 AS DOUBLE),
        |    list_transform(range(1, len(nq.e)+1), i -> nq.e[i]*cand.e[i])), (x,y) -> x+y)
@@ -751,31 +702,12 @@ object Similarity {
        |FROM r WHERE rank <= $k ORDER BY query_id, rank""".stripMargin
   }
 
-  /** Cell-blocked approximate k-NN self-join: the q29 scale path. Every
-    * vector only scores others in its own k-means cell, so pairwise work
-    * drops from n² to Σ|cell|² ≈ n²/nlist — the standard trade: vectors
-    * near a cell boundary may miss a true neighbor, which raising nlist
-    * granularity + probing adjacent cells (as in [[ivfTopK]]) recovers. */
-  def knnJoinBlocked(embeddings: DataFrame, k: Int = 3, nlist: Int = 16): DataFrame = {
-    val (assigned, _) = kmeansCells(embeddings, nlist)
-    val a = assigned.select(col("vec_id").as("src_id"), col("e").as("ea"),
-      col("nrm").as("na"), col("cell"))
-    val b = assigned.select(col("vec_id").as("__cand_id"), col("e").as("eb"),
-      col("nrm").as("nb"), col("cell"))
-    val scored = a.join(b, Seq("cell")).filter(col("src_id") =!= col("__cand_id"))
-      .select(col("src_id"), col("__cand_id"),
-        cosinePre(col("ea"), col("eb"), col("na"), col("nb")).as("sim"))
-    explodeTopK(scored, "src_id", "nbr_id", k)
-      .orderBy("src_id", "rank")
-  }
-
   /** q41: LSH-blocked approximate k-NN self-join — the oracle-gated
     * q29 scale path. Every vector scores only the others sharing ≥1 of
     * its [[LshTables]] sign-LSH buckets, so pairwise work drops from n²
-    * to L·Σ|bucket|² ≈ L·n²/2^bits (and, unlike the k-means cells of
-    * [[knnJoinBlocked]], the blocking is a pure function of the fixed
-    * hyperplanes — reproducible in any engine, which is what lets the
-    * DuckDB oracle check it exactly). Vectors colliding with nobody
+    * to L·Σ|bucket|² ≈ L·n²/2^bits (the blocking is a pure function of
+    * the fixed hyperplanes — reproducible in any engine, which is what
+    * lets the DuckDB oracle check it exactly). Vectors colliding with nobody
     * emit no rows. The bit count is corpus-scaled ([[multiTableBits]] —
     * the sf10 lesson: 4 fixed bits cost 406 s at 100× data; the ladder
     * keeps expected per-table bucket size bounded and the oracle

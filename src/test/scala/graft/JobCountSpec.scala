@@ -1,9 +1,10 @@
 package graft
 
-/** Driver round-trips of the trained classifiers and the graph operators
-  * over the shared pair table, pinned: job counts do not move with host
-  * load, so a rise here is a real extra pass or barrier, not noise. Each
-  * query runs in full into the noop sink. */
+/** Driver round-trips of the trained classifiers, the graph operators
+  * over the shared pair table and the k-means trainers, pinned: job
+  * counts do not move with host load, so a rise here is a real extra
+  * pass or barrier, not noise. Each query runs in full into the noop
+  * sink. */
 class JobCountSpec extends SparkTestBase {
 
   private def jobsOf(query: String): Int = jobsDuring(
@@ -32,6 +33,18 @@ class JobCountSpec extends SparkTestBase {
       "q158_contamination_hops" -> 16, "q195_kcore" -> 22,
       "q208_common_neighbors" -> 13).foreach { case (q, count) =>
     test(s"$q runs in $count Spark jobs once its artifacts exist") {
+      jobsOf(q)
+      val n = jobsOf(q)
+      assert(n == count, s"$q ran $n jobs")
+    }
+  }
+
+  // The k-means family trains in place (seed collect, Lloyd rounds,
+  // final assignment); counted after one untimed call like the graph
+  // pins above.
+  Seq("q63_kmeans" -> 15, "q65_ann_ivf" -> 17,
+      "q104_semdedup_trained" -> 16).foreach { case (q, count) =>
+    test(s"$q runs in $count Spark jobs") {
       jobsOf(q)
       val n = jobsOf(q)
       assert(n == count, s"$q ran $n jobs")

@@ -53,6 +53,28 @@ class KMeansSpec extends SparkTestBase {
     assert(graft.operators.SemDedup.semDedupTrained(df, 8).count() === 0L)
   }
 
+  test("an empty cell keeps its seed centroid through every round") {
+    // vec_id 0 and 1 seed the same centroid S, so every vector ties
+    // between cells 0 and 1 and goes to cell 0. The others come in
+    // pairs S ± d (d a multiple of 1/64, exact after quantization), so
+    // cell 0's mean is S again and every round ties the same way: cell 1
+    // never has a member and must keep its seed (not drop out, not 0/0)
+    val seed = Array.fill(KMeansOp.Dim)(0.5f)
+    val rng = new scala.util.Random(17)
+    val pairs = (1 to 9).flatMap { _ =>
+      val d = Array.fill(KMeansOp.Dim)((rng.nextInt(17) - 8) / 64.0f)
+      Seq(seed.zip(d).map { case (s, x) => s + x }, seed.zip(d).map { case (s, x) => s - x })
+    }
+    val rows = (Seq(seed, seed.clone()) ++ pairs).zipWithIndex
+      .map { case (v, i) => (i.toLong, v) }
+    val (qv, cents) = KMeansOp.trainCents(rows.toDF("vec_id", "embedding"), k = 2)
+    val seedQ = qv.filter(col("vec_id") === 1L).collect()(0).getSeq[Double](1)
+    assert(cents.map(_._1) === Seq(0L, 1L))
+    assert(cents(1)._2 === seedQ)
+    assert(cents(0)._2 === seedQ) // the mean of S, S and the S ± d pairs
+    assert(KMeansOp.assign(qv, cents).filter(col("cell") === 1L).count() === 0L)
+  }
+
   test("q181: points sitting exactly on their centroid score silhouette 1") {
     // 8 distinct basis vectors seed the cells (vec_id 0..7); ids 8..15
     // duplicate them exactly, so every cell's centroid IS its members'

@@ -24,10 +24,10 @@ oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
 
 
 def split_cte_chain(sql):
-    """Split `WITH n1 AS (...), n2 AS (...), ... <final select>` into
-    ([(name, body), ...], final_select). Top-level only: tracks paren
-    depth and single-quoted strings. Returns None if the SQL is not a
-    plain WITH-chain."""
+    """Split `WITH n1 AS (...), n2 AS [NOT] MATERIALIZED (...), ...
+    <final select>` into ([(name, body), ...], final_select). Top-level
+    only: tracks paren depth and single-quoted strings. Returns None if
+    the SQL is not a plain WITH-chain."""
     s = sql.strip()
     if not s.upper().startswith("WITH"):
         return None
@@ -47,6 +47,13 @@ def split_cte_chain(sql):
         i += 2
         while i < n and s[i] in " \t\n\r":
             i += 1
+        # optional `MATERIALIZED` / `NOT MATERIALIZED` before the body
+        for kw in ("NOT", "MATERIALIZED"):
+            if s[i:i + len(kw)].upper() == kw and i + len(kw) < n \
+                    and not s[i + len(kw)].isalnum():
+                i += len(kw)
+                while i < n and s[i] in " \t\n\r":
+                    i += 1
         if i >= n or s[i] != "(":
             return None
         depth, i = 1, i + 1
